@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.llm.{HttpLlm, LlmClient, StubLlm}
-import graft.model.Configs
+import graft.model.{Configs, PipelineConf}
 import graft.sources.Jsonl
 
 /** The reference's primary UX, Spark-native:
@@ -26,10 +26,7 @@ object Main {
     * Returns the enriched DataFrame (also written to the config's
     * out_data_path when set). */
   def run(spark: SparkSession, configPath: String): DataFrame = {
-    val json = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(configPath)),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val conf = Configs.parse(json)
+    val conf = loadConf(configPath)
     val inPath = conf.inDataPath.getOrElse(
       throw new IllegalArgumentException("config needs 'in_data_path'"))
     val llm = pickLlm(conf.llm.apiUrl, conf.llm.model)
@@ -39,6 +36,19 @@ object Main {
         s"LLM health check failed for ${conf.llm.apiType} @ ${conf.llm.apiUrl}")
     Jsonl.enrich(spark, conf, llm, inPath)
   }
+
+  private def loadConf(configPath: String): PipelineConf =
+    Configs.parse(new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(configPath)),
+      java.nio.charset.StandardCharsets.UTF_8))
+
+  /** Records enriched by [[run]]: counted from the written sink (one
+    * JSON line per record), since an action on the lazy `out` would
+    * call the LLM for every record again. Only a sink-less run counts
+    * `out` itself. */
+  private[graft] def enrichedCount(spark: SparkSession, conf: PipelineConf,
+      out: DataFrame): Long =
+    conf.outDataPath.fold(out.count())(p => spark.read.text(p).count())
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 1, "usage: graft.Main <config.json>")
@@ -53,7 +63,7 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
     try {
       val out = run(spark, args(0))
-      println(s"[graft.Main] enriched ${out.count()} records")
+      println(s"[graft.Main] enriched ${enrichedCount(spark, loadConf(args(0)), out)} records")
     } finally spark.stop()
   }
 }

@@ -16,7 +16,7 @@ import graft.ops.DocOps
   * that function's graph to a parquet cache and only calls out for
   * misses.
   *
-  * Spark-first shape (vs the per-doc loop in InstructionsPipeline):
+  * Spark-first shape (vs the in-partition pass of InstructionsPipeline):
   *   1. EXPLODE: one row per (doc × instruction) with the built
   *      prompt and its sha256 — the fan-out is data, not control
   *      flow, so Catalyst plans it;

@@ -62,11 +62,11 @@ object GroupedReduce {
     val p = params
     // STREAM the partition in bounded chunks instead of buffering it
     // whole (`it.toSeq` held every packed group prompt — bounded in
-    // groups, unbounded in prompt BYTES). 32 groups per chunk keeps
-    // an HTTP client's in-flight window full while capping resident
+    // groups, unbounded in prompt BYTES). A chunk of groups keeps an
+    // HTTP client's in-flight window full while capping resident
     // prompt bytes at chunk × maxDocs documents.
     packed.mapPartitions { it =>
-      it.grouped(32).flatMap { batch =>
+      it.grouped(InstructionsPipeline.chunkDocs).flatMap { batch =>
         val out = client.completeBatch(
           batch.map { case (_, body) => DocOps.initChatml(sys, body) }, p)
         batch.zip(out).map { case ((key, _), resp) => (key, resp) }

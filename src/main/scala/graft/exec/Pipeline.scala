@@ -3,8 +3,10 @@ package graft.exec
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.llm.{ChatMsg, LlmClient}
-import graft.model.{Instruction, JsonUtil, PipelineConf, Stage}
+import scala.collection.immutable.ListMap
+
+import graft.llm.LlmClient
+import graft.model.{Instruction, LlmParams, PipelineConf, Stage}
 import graft.ops.DocOps
 
 /** One pipeline document: stable id + the canonical field map
@@ -15,75 +17,101 @@ final case class PipeDoc(id: Long, fields: Map[String, String])
   *
   * Where the reference loops documents sequentially in one process
   * (bin/text_mr_pipe.py:51-58), here the document axis is the
-  * Dataset's partition axis and each stage is ONE `mapPartitions`
-  * pass: per document, all N instructions of the stage are built,
-  * sent as one batch (LlmClient.completeBatch = the asyncio.gather
-  * analog), and pivoted back into the next field map
-  * (instructions.py:39-59). Parallelism = partitions × maxInFlight.
+  * Dataset's partition axis and ALL stages run in ONE `mapPartitions`
+  * pass. The pass reads its partition in chunks of
+  * [[InstructionsPipeline.chunkDocs]] documents; per stage, every
+  * instruction prompt of every live document in the chunk goes out as
+  * one batch (LlmClient.completeBatch = the asyncio.gather analog), so
+  * an HTTP client's in-flight window stays full across document
+  * boundaries, and the answers are pivoted back into each document's
+  * next field map (instructions.py:39-59). Parallelism = partitions ×
+  * maxInFlight.
   *
   * Stage semantics preserved from the reference:
   *  - scope projection with silent missing-key drop (op 4);
   *  - all-or-nothing pivot: any empty/failed instruction response
   *    nulls the whole document's stage result (instructions.py:43-45,
-  *    surfaced here as fields=null);
-  *  - stage k+1 consumes ONLY stage k's result map (v0.py:45-50).
+  *    surfaced here as fields=null), and a null document skips every
+  *    later stage;
+  *  - stage k+1 consumes ONLY stage k's result map (v0.py:45-50);
+  *  - result maps keep instruction order; rows keep input order
+  *    within a partition.
   *
   * Scale posture: no driver-side state; the LLM client is rebuilt
-  * per executor (@transient lazy); deterministic params make the
-  * stage idempotent and therefore retry/cache-safe (SURVEY.md §4).
+  * per executor (@transient lazy); resident prompts are bounded by
+  * one chunk; deterministic params make the pass idempotent and
+  * therefore retry/cache-safe (SURVEY.md §4).
   */
 final class InstructionsPipeline(conf: PipelineConf, llm: LlmClient)
     extends Serializable {
 
   /** Run one stage over documents. */
   def runStage(ds: Dataset[PipeDoc], stage: Stage): Dataset[PipeDoc] = {
-    val instrs = stage.resolved
-    val params = conf.llm
-    val client = llm
     import ds.sparkSession.implicits._
-    ds.mapPartitions { docs =>
-      docs.map { doc =>
-        if (doc.fields == null) doc // propagate failed stage
-        else {
-          val batch: Seq[Seq[ChatMsg]] = instrs.map { ins =>
-            val projected = DocOps.scopeProject(doc.fields, ins.scope)
-            DocOps.initChatml(DocOps.buildSysMsg(ins), DocOps.buildUserMsg(projected))
-          }
-          val responses = client.completeBatch(batch, params)
-          // all-or-nothing pivot (instructions.py:43-45)
-          if (responses.exists(r => r == null || r.isEmpty))
-            PipeDoc(doc.id, null)
-          else
-            PipeDoc(doc.id,
-              scala.collection.immutable.ListMap(
-                instrs.map(_.name).zip(responses): _*))
-        }
-      }
-    }
+    ds.mapPartitions(evaluate(Seq(stage)).andThen(_.map(_.last)))
   }
 
-  /** Fold all stages; returns the final field map per document. */
-  def run(ds: Dataset[PipeDoc]): Dataset[PipeDoc] =
-    conf.pipe.foldLeft(ds)((d, s) => runStage(d, s))
+  /** Run all stages; returns the final field map per document. */
+  def run(ds: Dataset[PipeDoc]): Dataset[PipeDoc] = {
+    import ds.sparkSession.implicits._
+    ds.mapPartitions(evaluate(conf.pipe).andThen(_.map(_.last)))
+  }
 
   /** Full reference contract (v0.py:26-56): map results, reduce
     * results, and the markdown report, embedded next to the input
-    * fields under `conf.outputCol` (bin/text_mr_pipe.py:55). */
+    * fields under `conf.outputCol` (bin/text_mr_pipe.py:55). Both
+    * results come from the same pass, so the map stage runs once. */
   def runWithReport(ds: Dataset[PipeDoc]): DataFrame = {
+    require(conf.pipe.nonEmpty, "runWithReport needs at least one stage")
     import ds.sparkSession.implicits._
-    val staged = conf.pipe.scanLeft(ds)((d, s) => runStage(d, s))
-    val mapOut = staged(1)
-    val reduceOut = staged.last
-    val joined = mapOut.select(col("id"), col("fields").as("map_results"))
-      .join(reduceOut.select(col("id"), col("fields").as("reduce_results")), "id")
-    joined.withColumn(conf.outputCol,
-      struct(col("map_results"), col("reduce_results"),
-        DocOps.mdRenderCol(col("reduce_results")).as("result")))
-      .select(col("id"), col(conf.outputCol))
+    ds.mapPartitions(evaluate(conf.pipe).andThen(_.map(s =>
+        (s.head.id, s(1).fields, s.last.fields))))
+      .toDF("id", "map_results", "reduce_results")
+      .select(col("id"), struct(col("map_results"), col("reduce_results"),
+        DocOps.mdRenderCol(col("reduce_results")).as("result")).as(conf.outputCol))
+  }
+
+  /** The per-partition evaluator: for each input document, in input
+    * order, the document after 0, 1, …, `stages.size` stages. */
+  private def evaluate(stages: Seq[Stage]): Iterator[PipeDoc] => Iterator[Seq[PipeDoc]] = {
+    val instrs = stages.map(_.resolved)
+    val params = conf.llm
+    val client = llm
+    _.grouped(InstructionsPipeline.chunkDocs).flatMap { chunk =>
+      instrs.scanLeft(chunk)(InstructionsPipeline.stageChunk(_, _, client, params))
+        .transpose
+    }
   }
 }
 
 object InstructionsPipeline {
+
+  /** Documents (or groups) per `completeBatch` call: enough to keep an
+    * HTTP client's in-flight window full, few enough to bound the
+    * resident prompt bytes of a partition. */
+  private[exec] val chunkDocs = 32
+
+  /** One stage over one chunk: a single batch of every live document's
+    * prompts, pivoted back per document, all-or-nothing. */
+  private def stageChunk(docs: Seq[PipeDoc], instrs: Seq[Instruction],
+      client: LlmClient, params: LlmParams): Seq[PipeDoc] = {
+    val live = docs.filter(_.fields != null)
+    val answers = client.completeBatch(live.flatMap { doc =>
+      instrs.map { ins =>
+        val projected = DocOps.scopeProject(doc.fields, ins.scope)
+        DocOps.initChatml(DocOps.buildSysMsg(ins), DocOps.buildUserMsg(projected))
+      }
+    }, params).iterator
+    docs.map { doc =>
+      if (doc.fields == null) doc // propagate failed stage
+      else {
+        val responses = instrs.map(_ => answers.next())
+        // all-or-nothing pivot (instructions.py:43-45)
+        if (responses.exists(r => r == null || r.isEmpty)) PipeDoc(doc.id, null)
+        else PipeDoc(doc.id, ListMap(instrs.map(_.name).zip(responses): _*))
+      }
+    }
+  }
 
   /** Python-json.dumps(indent=2)-compatible re-render of a compact
     * JSON string (the reference's stringify formatting). */

@@ -30,7 +30,8 @@ object Jsonl {
     * → per-document map/reduce → original record + `results` → JSONL
     * out. A synthetic stable id keys the join of pipeline outputs
     * back onto source records; both sides derive from ONE cached
-    * DataFrame so the id assignment is consistent. */
+    * DataFrame so the id assignment is consistent. The returned frame
+    * is lazy: every action on it calls the LLM again. */
   def enrich(spark: SparkSession, conf: PipelineConf, llm: LlmClient,
       inPath: String, outPath: Option[String] = None): DataFrame = {
     val src = read(spark, inPath)

@@ -47,6 +47,15 @@ class MainSpec extends AnyFunSuite {
       .select("results.reduce_results.report")
       .collect().map(_.getString(0)).sorted
     assert(again.sameElements(results))
+
+    // the CLI's record count reads the sink: the lazy frame (whose
+    // every action calls the LLM again) is left alone
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    val conf = graft.model.Configs.parse(new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(configPath)), "UTF-8"))
+    val poisoned = spark.range(1).select(raise_error(lit("the enriched frame was re-run")))
+    assert(Main.enrichedCount(spark, conf, poisoned) == 2)
+    assert(Main.enrichedCount(spark, conf.copy(outDataPath = None), enriched) == 2)
   }
 
   test("missing in_data_path is a config error, not a silent no-op") {

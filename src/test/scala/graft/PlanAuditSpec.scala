@@ -137,4 +137,27 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(isLocal(graft.ext.TextAnalysis.textRank(spark, sf)), "textRank switch broken")
     assert(!isLocal(graft.ext.TextAnalysis.textRank(spark, sf, driverGridMax = 0)))
   }
+
+  test("instruction pipeline: runWithReport is one pass, with no Join and no Exchange") {
+    // Map and reduce results come from the same in-partition pass; a
+    // join of two stage outputs would run the map stage twice.
+    import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import spark.implicits._
+    val conf = graft.model.Configs.parse(graft.exec.Demo.pipelineJson)
+    val docs = (0 until 8).map(i =>
+      graft.exec.PipeDoc(i.toLong, Map("text" -> s"document $i", "lang" -> "en"))).toDS()
+    val df = new graft.exec.InstructionsPipeline(conf, graft.llm.StubLlm).runWithReport(docs)
+    assert(df.collect().length == 8)
+    val plan = df.queryExecution.executedPlan
+    val nodes = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) { case p: SparkPlan => p }
+    val offenders = nodes.collect {
+      case p @ (_: BaseJoinExec | _: Exchange) => p.nodeName
+    }
+    assert(offenders.isEmpty, s"join/exchange in the pipeline plan:\n$plan")
+    assert(nodes.count(_.isInstanceOf[MapPartitionsExec]) == 1,
+      s"expected exactly one mapPartitions pass:\n$plan")
+  }
 }

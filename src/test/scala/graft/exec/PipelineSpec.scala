@@ -3,8 +3,20 @@ package graft.exec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.llm.{FailingStubLlm, StubLlm}
-import graft.model.Configs
+import graft.llm.{ChatMsg, FailingStubLlm, LlmClient, StubLlm}
+import graft.model.{Configs, LlmParams, Stage}
+
+/** Calls made by [[PipelineCountingLlm]]; static so local-mode task
+  * closures share the counter with the spec. */
+object PipelineCalls {
+  val calls = new java.util.concurrent.atomic.AtomicLong()
+}
+class PipelineCountingLlm extends LlmClient {
+  override def complete(msgs: Seq[ChatMsg], params: LlmParams): String = {
+    PipelineCalls.calls.incrementAndGet()
+    StubLlm.complete(msgs, params)
+  }
+}
 
 class PipelineSpec extends AnyFunSuite {
 
@@ -65,6 +77,69 @@ class PipelineSpec extends AnyFunSuite {
     assert(res.getAs[Map[String, String]]("map_results").keySet == Set("summary", "meta"))
     assert(res.getAs[Map[String, String]]("reduce_results").keySet == Set("merged"))
     assert(res.getAs[String]("result").startsWith("# merged\n"))
+  }
+
+  /** runWithReport rows as (id, map_results, reduce_results, result), by id. */
+  def report(pipe: InstructionsPipeline, ds: org.apache.spark.sql.Dataset[PipeDoc])
+      : Seq[(Long, Map[String, String], Map[String, String], String)] =
+    pipe.runWithReport(ds).collect().toSeq.map { r =>
+      val res = r.getStruct(1)
+      (r.getLong(0), res.getAs[Map[String, String]]("map_results"),
+        res.getAs[Map[String, String]]("reduce_results"), res.getAs[String]("result"))
+    }.sortBy(_._1)
+
+  test("runWithReport makes docs x sum(instructions) LLM calls: the map stage runs once") {
+    val conf = Configs.parse(confJson)
+    PipelineCalls.calls.set(0)
+    val rows = report(new InstructionsPipeline(conf, new PipelineCountingLlm), docs(4))
+    assert(rows.size == 4)
+    assert(PipelineCalls.calls.get() == 4 * (2 + 1))
+  }
+
+  test("runWithReport: a failed map stage nulls both results") {
+    val conf = Configs.parse(confJson)
+    val rows = report(new InstructionsPipeline(conf, new FailingStubLlm("Describe metadata")), docs(3))
+    assert(rows.size == 3)
+    assert(rows.forall { case (_, m, r, _) => m == null && r == null })
+  }
+
+  test("runWithReport: a failed reduce stage keeps map_results, nulls reduce_results") {
+    val conf = Configs.parse(confJson)
+    val rows = report(new InstructionsPipeline(conf, new FailingStubLlm("Merge.")), docs(3))
+    val plain = report(new InstructionsPipeline(conf, StubLlm), docs(3))
+    assert(rows.size == 3)
+    assert(rows.map(_._2) == plain.map(_._2))
+    assert(rows.forall { case (_, m, r, _) => m.keySet == Set("summary", "meta") && r == null })
+  }
+
+  test("chunking cannot change results: 1 vs 8 partitions, and stage-by-stage composition") {
+    val conf = Configs.parse(confJson)
+    val pipe = new InstructionsPipeline(conf, StubLlm)
+    val one = docs(70).coalesce(1) // crosses the chunk boundary twice
+    assert(70 > 2 * InstructionsPipeline.chunkDocs)
+    val single = report(pipe, one)
+    assert(single == report(pipe, docs(70).repartition(8)))
+    val mapped = pipe.runStage(docs(70), conf.pipe(0))
+    val composed = pipe.runStage(mapped, conf.pipe(1)).collect().map(d => d.id -> d.fields).toMap
+    val mapOnly = mapped.collect().map(d => d.id -> d.fields).toMap
+    assert(single.forall { case (id, m, r, _) => m == mapOnly(id) && r == composed(id) })
+    // rows keep input order within a partition
+    assert(pipe.run(one).collect().map(_.id).toSeq == (0L until 70L))
+  }
+
+  test("a stage with zero instructions yields an empty map") {
+    val conf = Configs.parse(confJson)
+    val pipe = new InstructionsPipeline(conf, StubLlm)
+    val out = pipe.runStage(docs(40).coalesce(1), Stage(Nil)).collect()
+    assert(out.length == 40 && out.forall(_.fields == Map.empty))
+  }
+
+  test("one-stage pipe: map_results == reduce_results") {
+    val conf = Configs.parse(
+      """{"pipe": [[{"name": "summary", "content": "Summarize.", "scope": ["text"]}]]}""")
+    val rows = report(new InstructionsPipeline(conf, StubLlm), docs(5))
+    assert(rows.size == 5)
+    assert(rows.forall { case (_, m, r, _) => m != null && m.keySet == Set("summary") && m == r })
   }
 
   test("toDocs stringifies non-string columns (json2str_kv boundary)") {
