@@ -102,8 +102,10 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warmup (untimed): touch every table once — pulls parquet footers
-    // into the page cache and warms codegen/JIT so per-query timings
-    // measure the queries, not first-touch I/O and compiler startup.
+    // into the page cache, primes Tables' schema cache (so timed
+    // queries run no footer-inference job) and warms codegen/JIT so
+    // per-query timings measure the queries, not first-touch I/O and
+    // compiler startup.
     Tables.names.foreach { t =>
       try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
     }

@@ -1,7 +1,8 @@
 package graft.exec
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, MapType, StringType, StructField, StructType}
 
 import scala.collection.immutable.ListMap
 
@@ -37,8 +38,9 @@ final case class PipeDoc(id: Long, fields: Map[String, String])
   *  - result maps keep instruction order; rows keep input order
   *    within a partition.
   *
-  * Scale posture: no driver-side state; the LLM client is rebuilt
-  * per executor (@transient lazy); resident prompts are bounded by
+  * Scale posture: no driver-side state; the LLM client is shipped
+  * with the closure (HttpLlm shares one HTTP client per executor
+  * JVM); resident prompts are bounded by
   * one chunk; deterministic params make the pass idempotent and
   * therefore retry/cache-safe (SURVEY.md §4).
   */
@@ -48,13 +50,13 @@ final class InstructionsPipeline(conf: PipelineConf, llm: LlmClient)
   /** Run one stage over documents. */
   def runStage(ds: Dataset[PipeDoc], stage: Stage): Dataset[PipeDoc] = {
     import ds.sparkSession.implicits._
-    ds.mapPartitions(evaluate(Seq(stage)).andThen(_.map(_.last)))
+    ds.mapPartitions(evaluate[PipeDoc](Seq(stage), d => d).andThen(_.map(_._2.last)))
   }
 
   /** Run all stages; returns the final field map per document. */
   def run(ds: Dataset[PipeDoc]): Dataset[PipeDoc] = {
     import ds.sparkSession.implicits._
-    ds.mapPartitions(evaluate(conf.pipe).andThen(_.map(_.last)))
+    ds.mapPartitions(evaluate[PipeDoc](conf.pipe, d => d).andThen(_.map(_._2.last)))
   }
 
   /** Full reference contract (v0.py:26-56): map results, reduce
@@ -64,22 +66,44 @@ final class InstructionsPipeline(conf: PipelineConf, llm: LlmClient)
   def runWithReport(ds: Dataset[PipeDoc]): DataFrame = {
     require(conf.pipe.nonEmpty, "runWithReport needs at least one stage")
     import ds.sparkSession.implicits._
-    ds.mapPartitions(evaluate(conf.pipe).andThen(_.map(s =>
-        (s.head.id, s(1).fields, s.last.fields))))
+    ds.mapPartitions(evaluate[PipeDoc](conf.pipe, d => d).andThen(_.map { case (d, s) =>
+        (d.id, s(1).fields, s.last.fields) }))
       .toDF("id", "map_results", "reduce_results")
-      .select(col("id"), struct(col("map_results"), col("reduce_results"),
-        DocOps.mdRenderCol(col("reduce_results")).as("result")).as(conf.outputCol))
+      .select(col("id"), report(col("map_results"), col("reduce_results")).as(conf.outputCol))
   }
 
-  /** The per-partition evaluator: for each input document, in input
-    * order, the document after 0, 1, …, `stages.size` stages. */
-  private def evaluate(stages: Seq[Stage]): Iterator[PipeDoc] => Iterator[Seq[PipeDoc]] = {
+  /** [[runWithReport]] keeping each input row whole: `df`'s columns,
+    * then `conf.outputCol`. The pass carries every row next to its
+    * document and emits it with that document's results, so `df` is
+    * scanned once and no key has to pair results with records. */
+  def runKeepingRows(df: DataFrame, pretty: Boolean = false): DataFrame = {
+    require(conf.pipe.nonEmpty, "runKeepingRows needs at least one stage")
+    val width = df.schema.size
+    val results = MapType(StringType, StringType)
+    val out = df.schema.add("__graft_map", results).add("__graft_reduce", results)
+    // the id is unused: the row itself goes along
+    val pass = evaluate[Row](conf.pipe, r => PipeDoc(0L, r.getMap[String, String](width).toMap))
+    df.select(col("*"), InstructionsPipeline.fieldsCol(df.schema.fields.toSeq, pretty))
+      .mapPartitions(pass.andThen(_.map { case (r, s) =>
+        Row.fromSeq(r.toSeq.take(width) :+ s(1).fields :+ s.last.fields) }))(Encoders.row(out))
+      .withColumn(conf.outputCol, report(col("__graft_map"), col("__graft_reduce")))
+      .drop("__graft_map", "__graft_reduce")
+  }
+
+  private def report(mapResults: Column, reduceResults: Column): Column =
+    struct(mapResults.as("map_results"), reduceResults.as("reduce_results"),
+      DocOps.mdRenderCol(reduceResults).as("result"))
+
+  /** The per-partition evaluator: for each input item, in input order,
+    * the item and its document after 0, 1, …, `stages.size` stages. */
+  private def evaluate[T](stages: Seq[Stage],
+      doc: T => PipeDoc): Iterator[T] => Iterator[(T, Seq[PipeDoc])] = {
     val instrs = stages.map(_.resolved)
     val params = conf.llm
     val client = llm
     _.grouped(InstructionsPipeline.chunkDocs).flatMap { chunk =>
-      instrs.scanLeft(chunk)(InstructionsPipeline.stageChunk(_, _, client, params))
-        .transpose
+      chunk.zip(instrs.scanLeft(chunk.map(doc))(
+        InstructionsPipeline.stageChunk(_, _, client, params)).transpose)
     }
   }
 }
@@ -127,21 +151,22 @@ object InstructionsPipeline {
     * (cheaper; fine when prompts need not be byte-faithful). */
   def toDocs(df: DataFrame, idCol: String, pretty: Boolean = false): Dataset[PipeDoc] = {
     import df.sparkSession.implicits._
-    val others = df.schema.fields.filter(_.name != idCol)
-    val kvs = others.flatMap { f =>
+    df.select(col(idCol).cast("long").as("id"),
+        fieldsCol(df.schema.fields.toSeq.filter(_.name != idCol), pretty))
+      .as[PipeDoc]
+  }
+
+  /** The `fields` map of [[toDocs]] over `columns`. */
+  private def fieldsCol(columns: Seq[StructField], pretty: Boolean): Column =
+    map(columns.flatMap { f =>
       val stringified = f.dataType match {
-        case org.apache.spark.sql.types.StringType => col(f.name)
-        case _: org.apache.spark.sql.types.StructType |
-             _: org.apache.spark.sql.types.ArrayType |
-             _: org.apache.spark.sql.types.MapType =>
+        case StringType => col(f.name)
+        case _: StructType | _: ArrayType | _: MapType =>
           if (pretty) prettyJson(to_json(col(f.name))) else to_json(col(f.name))
         case _ => col(f.name).cast("string")
       }
       Seq(lit(f.name), coalesce(stringified, lit("null")))
-    }
-    df.select(col(idCol).cast("long").as("id"), map(kvs: _*).as("fields"))
-      .as[PipeDoc]
-  }
+    }: _*).as("fields")
 
   /** Run a JSON pipeline config against a table, reference-style. */
   def runConfig(spark: SparkSession, confJson: String, df: DataFrame,

@@ -10,8 +10,8 @@ final case class ChatMsg(role: String, content: String)
   * (/root/reference/src/python/instructionspipe/llm_cli.py:60-82).
   *
   * Implementations must be Serializable: instances are closed over by
-  * `mapPartitions` and shipped to executors; per-partition transient
-  * state (HTTP client) is rebuilt lazily on each executor.
+  * `mapPartitions` and shipped to executors; heavy shared state (the
+  * HTTP client) lives in a companion object, built once per JVM.
   */
 trait LlmClient extends Serializable {
 
@@ -79,10 +79,9 @@ final class FailingStubLlm(failIfContains: String) extends LlmClient {
 class HttpLlm(maxInFlight: Int = 8, maxRetries: Int = 2,
     backoffMs: Long = 200) extends LlmClient {
 
-  @transient private lazy val http: java.net.http.HttpClient =
-    java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(30))
-      .build()
+  /** The JVM's one client ([[HttpLlm.client]]): every task an executor
+    * runs shares its selector thread and connection pool. */
+  private[llm] def http: java.net.http.HttpClient = HttpLlm.client
 
   /** Transport seams — overridden by specs with a fake; production
     * goes through java.net.http. */
@@ -201,4 +200,19 @@ class HttpLlm(maxInFlight: Int = 8, maxRetries: Int = 2,
       case _ => ""
     }
   }
+}
+
+object HttpLlm {
+  /** Built on first use in each JVM. An instance field would not do:
+    * Spark deserializes a task's closure once per task, so every task
+    * would build its own client, threads and pool. The executor's
+    * concurrent tasks (each up to `maxInFlight` requests) now share
+    * this client's connections; against an HTTP/2 endpoint that can be
+    * one multiplexed connection, capped by the server's concurrent
+    * stream limit. The effect on a real endpoint's throughput and
+    * error rate has not been measured. */
+  private lazy val client: java.net.http.HttpClient =
+    java.net.http.HttpClient.newBuilder()
+      .connectTimeout(java.time.Duration.ofSeconds(30))
+      .build()
 }

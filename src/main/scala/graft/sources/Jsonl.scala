@@ -1,9 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.exec.{InstructionsPipeline, PipeDoc}
+import graft.exec.InstructionsPipeline
 import graft.llm.LlmClient
 import graft.model.PipelineConf
 
@@ -28,20 +27,15 @@ object Jsonl {
 
   /** Full reference driver loop (bin/text_mr_pipe.py main): JSONL in
     * → per-document map/reduce → original record + `results` → JSONL
-    * out. A synthetic stable id keys the join of pipeline outputs
-    * back onto source records; both sides derive from ONE cached
-    * DataFrame so the id assignment is consistent. The returned frame
-    * is lazy: every action on it calls the LLM again. */
+    * out. Each record travels through the pipeline pass with its
+    * document ([[InstructionsPipeline.runKeepingRows]]), so the input
+    * is scanned once, nothing is cached, and no id has to agree across
+    * two scans. The returned frame is lazy: every action on it calls
+    * the LLM again. */
   def enrich(spark: SparkSession, conf: PipelineConf, llm: LlmClient,
       inPath: String, outPath: Option[String] = None): DataFrame = {
-    val src = read(spark, inPath)
-      .withColumn("__graft_id", monotonically_increasing_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val docs = InstructionsPipeline.toDocs(src, "__graft_id", pretty = true)
-    val results = new InstructionsPipeline(conf, llm).runWithReport(docs)
-    val enriched = src
-      .join(results.withColumnRenamed("id", "__graft_id"), "__graft_id")
-      .drop("__graft_id")
+    val enriched = new InstructionsPipeline(conf, llm)
+      .runKeepingRows(read(spark, inPath), pretty = true)
     outPath.orElse(conf.outDataPath).foreach(p => write(enriched, p))
     enriched
   }

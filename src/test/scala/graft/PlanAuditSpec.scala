@@ -160,4 +160,17 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(nodes.count(_.isInstanceOf[MapPartitionsExec]) == 1,
       s"expected exactly one mapPartitions pass:\n$plan")
   }
+
+  test("q126_tpch_q6: a second build runs no Spark job and plans as the first") {
+    // Tables keeps each table's inferred schema, so only a table's first
+    // read pays the footer job; the plan must not notice the difference.
+    val build = SparkEntry.queries("q126_tpch_q6")
+    val (first, _) = TestSpark.countJobs(build(spark, sf))
+    val (second, jobs) = TestSpark.countJobs(build(spark, sf))
+    assert(jobs == 0, s"second build ran $jobs Spark jobs")
+    def plan(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+    assert(plan(second) == plan(first))
+    assert(plan(second).contains("PushedFilters"), plan(second))
+  }
 }

@@ -127,6 +127,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(pipe.run(one).collect().map(_.id).toSeq == (0L until 70L))
   }
 
+  test("runKeepingRows: every input row once, in order, with runWithReport's results") {
+    import spark.implicits._
+    val conf = Configs.parse(confJson)
+    val pipe = new InstructionsPipeline(conf, StubLlm)
+    // one partition crosses the chunk boundary twice
+    val df = (0 until 70).map(i => (i.toLong, s"document number $i body", "en", 42))
+      .toDF("k", "text", "lang", "n_chars").coalesce(1)
+    val kept = pipe.runKeepingRows(df)
+    assert(kept.columns.toSeq == Seq("k", "text", "lang", "n_chars", "results"))
+    val rows = kept.collect().toSeq
+    assert(rows.map(_.getLong(0)) == (0L until 70L))
+    assert(rows.forall(r => r.getString(1) == s"document number ${r.getLong(0)} body"))
+    // `k` is out of every scope, so the prompts match toDocs without it
+    val want = report(pipe, InstructionsPipeline.toDocs(df, "k"))
+    assert(rows.map { r =>
+      val res = r.getStruct(4)
+      (r.getLong(0), res.getAs[Map[String, String]]("map_results"),
+        res.getAs[Map[String, String]]("reduce_results"), res.getAs[String]("result"))
+    } == want)
+    val failed = new InstructionsPipeline(conf, new FailingStubLlm("Describe metadata"))
+      .runKeepingRows(df).collect()
+    assert(failed.length == 70)
+    assert(failed.forall(r => r.getStruct(4).isNullAt(0) && r.getStruct(4).isNullAt(1)))
+  }
+
   test("a stage with zero instructions yields an empty map") {
     val conf = Configs.parse(confJson)
     val pipe = new InstructionsPipeline(conf, StubLlm)

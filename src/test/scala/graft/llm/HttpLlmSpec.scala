@@ -131,4 +131,19 @@ class HttpLlmSpec extends AnyFunSuite {
     val outs = e.completeBatch(Seq(msgs, msgs, msgs), p)
     assert(outs.length == 3 && e.calls.get() == 4)
   }
+
+  test("deserialized copies share the JVM's one HTTP client") {
+    // Spark deserializes a task's closure once per task; each copy
+    // must reuse the client (threads, connection pool), not build one
+    def roundTrip(x: HttpLlm): HttpLlm = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      try out.writeObject(x) finally out.close()
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[HttpLlm]
+    }
+    val a = roundTrip(http)
+    val b = roundTrip(http)
+    assert((a ne b) && (a.http eq b.http) && (a.http eq http.http))
+  }
 }

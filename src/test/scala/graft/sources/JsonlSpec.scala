@@ -216,4 +216,63 @@ class JsonlSpec extends AnyFunSuite {
     assert(patient.startsWith("{\n  \""))
     assert(patient.contains("\"name\": \"Alex Roe\""))
   }
+
+  test("enrich retains no cached RDD across calls") {
+    val conf = Configs.parse(ehrConf)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = java.nio.file.Files.createTempDirectory("graft-ehr-nocache")
+    // a path no earlier test read, so no cached plan of it predates `before`
+    val in = out.resolve("in.jsonl")
+    java.nio.file.Files.copy(java.nio.file.Path.of(fixture), in)
+    Jsonl.enrich(spark, conf, StubLlm, in.toString, Some(s"$out/a"))
+    Jsonl.enrich(spark, conf, StubLlm, in.toString, Some(s"$out/b"))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("enrich over a 3-file input: every record gets its own results") {
+    // the driver-side reference catches any record paired with
+    // another record's results
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.exec.InstructionsPipeline
+    import graft.ops.DocOps
+    val conf = Configs.parse(ehrConf)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ehr-3files")
+    for (f <- 0 until 3)
+      java.nio.file.Files.writeString(dir.resolve(s"part-$f.jsonl"), (0 until 3).map { r =>
+        s"""{"rid": "r$f$r", "patient": {"name": "P$f$r", "age": ${40 + 3 * f + r}}, """ +
+          s""""notes": "note $f $r", "labs": [{"test_name": "panel $r", "value": ${10 * f + r}}]}"""
+      }.mkString("", "\n", "\n"))
+    val got = Jsonl.enrich(spark, conf, StubLlm, dir.toString)
+      .select(col("rid"), col("results.map_results"), col("results.reduce_results"))
+      .collect().map(r => r.getString(0) ->
+        (r.getMap[String, String](1).toMap, r.getMap[String, String](2).toMap)).toMap
+    val docs = InstructionsPipeline.toDocs(
+      Jsonl.read(spark, dir.toString).withColumn("__k", lit(0L)), "__k", pretty = true).collect()
+    val want = docs.map { d =>
+      val maps = conf.pipe.scanLeft(d.fields) { (fields, stage) =>
+        stage.resolved.map { ins =>
+          ins.name -> StubLlm.complete(DocOps.initChatml(DocOps.buildSysMsg(ins),
+            DocOps.buildUserMsg(DocOps.scopeProject(fields, ins.scope))), conf.llm)
+        }.toMap
+      }
+      d.fields("rid") -> (maps(1), maps(2))
+    }.toMap
+    assert(got.size == 9)
+    assert(got == want)
+  }
+
+  test("enrich scans its input once and joins nothing back") {
+    // each record rides through the pipeline pass with its document,
+    // so no id has to agree between two scans of the input
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val enriched = Jsonl.enrich(spark, Configs.parse(ehrConf), StubLlm, fixture)
+    val plan = enriched.queryExecution.executedPlan
+    val nodes = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) { case p: SparkPlan => p }
+    assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), plan)
+    assert(nodes.count(_.isInstanceOf[FileSourceScanExec]) == 1, plan)
+    assert(enriched.columns.toSeq == spark.read.json(fixture).columns.toSeq :+ "results")
+  }
 }
