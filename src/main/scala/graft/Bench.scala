@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Per-pass sample summary. Samples are seconds; a NEGATIVE sample
     * is the failure sentinel a throwing query records (strictly
@@ -78,26 +77,7 @@ object Bench {
       System.err.println(s"[bench] WARNING: running at local[$cpus] — " +
         s"BASELINE.md anchors are CPUS=$anchorCpus; totals are NOT " +
         "comparable to the anchor rows (r11 methodology note)")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r15 opt: the engine's limit(n).collect() calls are GUARD
-      // probes (witness rows, boundedGrid caps) that are expected to
-      // scan every partition — near-empty frames or size checks —
-      // so executeTake's default start-at-1-partition ramp (1, 4,
-      // 16, …) costs 3-4 sequential driver jobs per probe where one
-      // suffices. Start at the session width (scale-parameterized,
-      // not a local[32] constant); real top-k queries go through
-      // TakeOrderedAndProject and are unaffected.
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      // r15 opt: the default 100-entry codegen class cache thrashes
-      // under a 300+-query catalog (every pass re-runs Janino on
-      // every whole-stage unit); 10k entries ≈ tens of MB of driver
-      // memory and lets repeated plans reuse their compiled classes
-      // at any scale (static conf — must be set before the session).
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

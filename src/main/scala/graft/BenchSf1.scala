@@ -1,15 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The sf1 scaling probe as a per-round HARNESS artifact (VERDICT r8
   * item 7): the r7/r8 probes that caught q157's 327× pair blow-up were
-  * manual DevTime runs — this main pins the same methodology
-  * (local[4], shuffle 4, interleaved passes, min per query) and writes
-  * `BENCH_SF1.json` so scaling regressions surface per round without
-  * judge archaeology. Ratios land next to BASELINE.md's time-vs-sf
-  * table; a query whose ratio at 10× data jumps far above its recorded
-  * row is a scale regression even when sf0.1 totals look fine.
+  * manual single-query timing runs (today: [[Bench]] with
+  * `SPARK_GRAFT_ONLY`) — this main pins the same methodology
+  * (local[4], shuffle 4, interleaved passes, min per query) and
+  * writes `BENCH_SF1.json` so scaling regressions surface
+  * per round without judge archaeology. Ratios land next to
+  * BASELINE.md's time-vs-sf table; a query whose ratio at 10× data
+  * jumps far above its recorded row is a scale regression even when
+  * sf0.1 totals look fine.
   *
   * Runs the heavy self-join / iterative / banding family — the queries
   * whose plans COULD go super-linear — over sf0.1 and the
@@ -125,12 +125,7 @@ object BenchSf1 {
     val outFile = if (args.length > 4) args(4) else "BENCH_SF1.json"
     require(new java.io.File(s"$sf1/documents.parquet").exists(),
       s"$sf1 missing — generate it first: sbt \"runMain graft.DevScaleGen\"")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    val spark = GraftSession.builder("local[4]")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -52,13 +52,11 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 1, "usage: graft.Main <config.json>")
-    val spark = SparkSession.builder()
+    // spark-submit injects spark.master as a system property and
+    // wins; a bare `java -cp`/sbt invocation falls back to local
+    val spark = GraftSession
+      .builder(sys.props.getOrElse("spark.master", "local[*]"))
       .appName("graft-mr-pipe")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // spark-submit injects spark.master as a system property and
-      // wins; a bare `java -cp`/sbt invocation falls back to local
-      .master(sys.props.getOrElse("spark.master", "local[*]"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

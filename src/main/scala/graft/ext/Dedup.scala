@@ -773,26 +773,12 @@ object Dedup {
     graft.sources.Bucketed.readPruned(spark, indexPath,
       newKeys.select(lshPb(numPb).as("pb")))
 
-  /** Re-layout a [[writeLshIndex]] store at a new cell count (the
-    * [[graft.ext.Linkage.migrateDeletionKeyIndexLayout]] recipe on
-    * the LSH family — same (band, bucket) hash, new modulus). */
-  def migrateLshIndexLayout(spark: SparkSession, inPath: String,
-      outPath: String, newNumPb: Int): Long =
-    graft.sources.Bucketed.repartitionPbStore(spark, inPath, outPath,
-      newNumPb, lshPb)
-
   /** The shingle/signature stores' probe-bucket column: pb over
     * doc_id — the verify stage probes these stores by ID-equi-join
     * from the (bounded) candidate pairs, so pruning to the
     * candidates' id cells is recall-safe. */
   private def idPb(numPb: Int): Column =
     graft.sources.Bucketed.probeBucket(numPb, col("doc_id"))
-
-  /** Re-layout a [[writeShingleStore]] at a new cell count. */
-  def migrateShingleStoreLayout(spark: SparkSession, inPath: String,
-      outPath: String, newNumPb: Int): Long =
-    graft.sources.Bucketed.repartitionPbStore(spark, inPath, outPath,
-      newNumPb, idPb)
 
   /** Full build of the doc_id → shingle-set store (the verify
     * stage's side table), laid out `partitionBy(pb)` over doc_id so
@@ -1136,6 +1122,11 @@ object Dedup {
     * cluster-FS directory switches every truncation to reliable
     * `checkpoint` so the iteration survives executor loss. Default
     * stays local: right for local[N] and for the bench.
+    *
+    * `driverGridMax`: the most RAW input rows of `edges` (duplicates
+    * and both directions of an edge each count) that take the
+    * driver-side union-find path under `"auto"`; a larger or empty
+    * edge frame runs distributed, and 0 forces distributed.
     *
     * `algorithm`: `"labelprop"` (one-hop min propagation,
     * O(diameter) rounds, one shuffle join per round) or `"doubling"`

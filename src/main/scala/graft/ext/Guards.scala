@@ -45,6 +45,14 @@ object Guards {
     *     CEILINGED at the 65536 convention every parity spec and
     *     bench anchor was measured under (more heap never silently
     *     raises the collect bound; less heap lowers it).
+    *
+    * Unit: rows the caller's altitude probe collects. For
+    * [[graft.ext.Dedup.connectedComponents]] (and so ccIncrement,
+    * ccDecrement and every dedup composition) that is RAW input edge
+    * rows — a duplicate row and each direction of an edge count once
+    * each — not distinct undirected edges; the graph loops
+    * (pageRank, HITS, k-core, BFS, TextRank) collect the edge grid
+    * they have already built.
     */
   def defaultDriverGridMax: Int =
     sys.props.get("graft.driverGridMax")

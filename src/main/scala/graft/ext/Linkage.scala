@@ -382,9 +382,9 @@ object Linkage {
       val newKeys = deletionKeyTable(recsBatch)
         .localCheckpoint(eager = false)
       keyPieces :+= newKeys
-      // erAppendEdges already returns an eagerly localCheckpointed
-      // frame — re-checkpointing it copied every block again (one
-      // wasted job per batch, r15 opt)
+      // erAppendEdges already returns a filter over a checkpoint its
+      // witness probe materialized — re-checkpointing it copied every
+      // block again (one wasted job per batch, r15 opt)
       val edges = erAppendEdges(newKeys, keyPieces.reduce(_ unionByName _),
           maxDist, maxBucket)
       edgePieces :+= edges
@@ -456,9 +456,9 @@ object Linkage {
       val newKeys = deletionKeyTable(recsBatch)
         .localCheckpoint(eager = false)
       keyPieces :+= newKeys
-      // erAppendEdges already returns an eagerly localCheckpointed
-      // frame — re-checkpointing it copied every block again (one
-      // wasted job per batch, r15 opt)
+      // erAppendEdges already returns a filter over a checkpoint its
+      // witness probe materialized — re-checkpointing it copied every
+      // block again (one wasted job per batch, r15 opt)
       val edges = erAppendEdges(newKeys, keyPieces.reduce(_ unionByName _),
           maxDist, maxBucket)
       edgePieces :+= edges

@@ -1781,7 +1781,6 @@ object Similarity {
       .select(col("vec_id"),
         transform(col("embedding"), v => v.cast("double")).as("x"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val jGrid = (0 until k).map(j => lit(j)).toArray
     // ±1 signs from md5("j:p") parity — the portable-hash family
     val sign = when(
       pmod(conv(substring(md5(concat_ws(":", col("j"), col("pos"))),

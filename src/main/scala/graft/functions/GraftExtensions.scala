@@ -9,12 +9,8 @@ import org.apache.spark.sql.types.IntegerType
 /** SparkSessionExtensions wiring: exposes the native expressions to
   * SQL users (`SELECT cosine_sim(a, b)`, `SELECT minhash_sig(sh, 32)`).
   *
-  * Register with:
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)           // or
-  *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  * }}}
+  * [[graft.GraftSession]] registers them; a session built elsewhere
+  * sets `spark.sql.extensions=graft.functions.GraftExtensions`.
   * The Column API (graft.functions.exprs) works without registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

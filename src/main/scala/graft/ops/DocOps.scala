@@ -67,22 +67,8 @@ object DocOps {
 
   // ---- Column variants (for DataFrame-level composition) ----
 
-  /** scope-project over a MapType(String,String) column. */
-  def scopeProjectCol(m: Column, scope: Seq[String]): Column =
-    map_filter(m, (k, _) => array_contains(array(scope.map(lit): _*), k))
-
-  /** json-clean as a codegen'd column expression. */
-  def jsonCleanCol(c: Column): Column =
-    trim(regexp_replace(c, "```(json)?", ""))
-
   /** md-render over a MapType column: deterministic key order. */
   def mdRenderCol(m: Column): Column =
     concat_ws("\n\n", transform(map_entries(m),
       e => concat(lit("# "), e.getField("key"), lit("\n"), e.getField("value"))))
-
-  /** xml-pack over a MapType column. */
-  def xmlPackCol(m: Column): Column =
-    concat_ws("\n\n", transform(map_entries(m),
-      e => concat(lit("<"), e.getField("key"), lit(">\n"),
-        e.getField("value"), lit("\n</"), e.getField("key"), lit(">"))))
 }

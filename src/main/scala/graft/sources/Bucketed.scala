@@ -163,7 +163,7 @@ object Bucketed {
   /** The sizing rule applied AUTOMATICALLY from store stats — the
     * executable form of "raise numPb when the index outgrows it": a
     * maintenance job calls this between stream drains and triggers
-    * [[repartitionPbStore]] (via the family wrappers) when
+    * [[repartitionPbStore]] (via the family wrapper) when
     * `migrationAdvised`. Only GROWTH is advised: an over-provisioned
     * cell count costs directory writes per append (measured,
     * BASELINE r14) but never correctness or probe I/O, so shrinking
@@ -189,9 +189,8 @@ object Bucketed {
     * in-place re-layout is not atomic). Batch bookkeeping
     * (`ingest_batch`) is dropped: a migrated store restarts its
     * append history like a fresh full build. Returns the migrated
-    * row count. Family wrappers supply `pbOf`:
-    * [[graft.ext.Linkage.migrateDeletionKeyIndexLayout]] and the
-    * LSH/shingle twins in [[graft.ext.Dedup]]. */
+    * row count. The family wrapper supplies `pbOf`:
+    * [[graft.ext.Linkage.migrateDeletionKeyIndexLayout]]. */
   def repartitionPbStore(spark: SparkSession, inPath: String,
       outPath: String, newNumPb: Int,
       pbOf: Int => Column): Long = {

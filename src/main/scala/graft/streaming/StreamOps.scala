@@ -339,9 +339,11 @@ object StreamOps {
           graft.ext.Linkage.readDeletionKeyIndexPruned(spark,
             indexPath, newKeys, numPb),
           tombstoneVersions(spark, tombPath), "c_custkey")
+        // erAppendEdges returns a filter over a checkpoint its witness
+        // probe materialized; checkpointing it again copied every block
+        // in one more job per add batch
         val edges = graft.ext.Linkage.erAppendEdges(newKeys, live,
-            maxDist, maxBucket, pruneTouched = pruneTouched)
-          .localCheckpoint(eager = true)
+          maxDist, maxBucket, pruneTouched = pruneTouched)
         edges.write.mode("overwrite")
           .parquet(s"$edgePath/ingest_batch=$id")
         labels = graft.ext.Dedup.ccIncrement(labels, edges,
@@ -432,11 +434,12 @@ object StreamOps {
               bands * rowsPerBand).as("sig")),
           bands, rowsPerBand).localCheckpoint(eager = true)
         val tv = tombstoneVersions(spark, tombPath)
+        // already materialized by lshAppendCandidates' witness probe,
+        // like erAppendEdges' result above
         val cands = graft.ext.Dedup.lshAppendCandidates(newKeys,
-            maskVersioned(graft.ext.Dedup.readLshIndexPruned(spark,
-              indexPath, newKeys, numPb), tv, "doc_id"),
-            maxBucket, pruneTouched = pruneTouched)
-          .localCheckpoint(eager = true)
+          maskVersioned(graft.ext.Dedup.readLshIndexPruned(spark,
+            indexPath, newKeys, numPb), tv, "doc_id"),
+          maxBucket, pruneTouched = pruneTouched)
         val edges = graft.ext.Dedup.verifyPairs(
             maskVersioned(graft.ext.Dedup.readShingleStorePruned(spark,
               shPath, cands, numPb), tv, "doc_id"),

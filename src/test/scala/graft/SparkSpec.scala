@@ -2,15 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared test session: one per test JVM, never stopped mid-run. */
+/** Shared test session: one per test JVM, never stopped mid-run —
+  * the engine's own [[GraftSession]] at local[4]. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder("local[4]")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

@@ -704,6 +704,51 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(streamed.map(_._1).toSet.intersect(reAdded).nonEmpty)
   }
 
+  // Spark jobs one add-only micro-batch runs on fresh stores. The
+  // append paths' results are filters over checkpoints their witness
+  // probe already materialized; an eager checkpoint of them on top
+  // (what both maintainers used to take) is one more job: 21 and 30.
+  private def addBatchJobs(
+      writer: org.apache.spark.sql.streaming.DataStreamWriter[_],
+      base: String): Int =
+    TestSpark.countJobs(writer.option("checkpointLocation", base + "/ckpt")
+      .start().awaitTermination())._2
+
+  test("er CDC stream: one add batch runs 20 Spark jobs (erAppendEdges' result is not checkpointed again)") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val recs = graft.Tables.customer(spark, TestSpark.sf)
+      .select(col("c_custkey"), col("c_name"),
+        col("c_nationkey"), col("c_mktsegment")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getString(3), "add"))
+      .toSeq
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-er-jobs").toString
+    val src = MemoryStream[(Long, String, Int, String, String)]
+    val (writer, _) = StreamOps.erMaintainCdcStream(
+      src.toDS().toDF("c_custkey", "c_name", "c_nationkey",
+        "c_mktsegment", "op"),
+      base + "/idx", base + "/edges", base + "/tombs")
+    src.addData(recs)
+    assert(addBatchJobs(writer, base) == 20)
+  }
+
+  test("lsh CDC stream: one add batch runs 29 Spark jobs (lshAppendCandidates' result is not checkpointed again)") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val docs = graft.Tables.documents(spark, TestSpark.sf)
+      .select(col("doc_id"), col("text")).collect()
+      .map(r => (r.getLong(0), r.getString(1), "add")).toSeq
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-lsh-jobs").toString
+    val src = MemoryStream[(Long, String, String)]
+    val (writer, _) = StreamOps.lshMaintainCdcStream(
+      src.toDS().toDF("doc_id", "text", "op"),
+      base + "/idx", base + "/sh", base + "/edges", base + "/tombs")
+    src.addData(docs)
+    assert(addBatchJobs(writer, base) == 29)
+  }
+
   test("er CDC stream: periodic fold bounds stores, keeps parity, and re-admits after compaction") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
