@@ -84,18 +84,6 @@ object Dedup {
       .join(knownHashes.select(col("content_hash")), Seq("content_hash"), "left_anti")
       .select(col("doc_id"), col("content_hash"))
 
-  /** Word k-shingles from a PRE-MATERIALIZED token-array column
-    * (distinct, order-free). HOF reference composition — a position
-    * sequence, an interpreted lambda frame and a sliced copy per
-    * shingle. Kept ONLY as the semantics oracle the native expression
-    * is spec'd identical against; query paths use
-    * [[shinglesFromTokens]]. */
-  def shinglesFromTokensHof(toks: Column, k: Int): Column =
-    array_distinct(
-      when(size(toks) < k, array(concat_ws(" ", toks)))
-        .otherwise(transform(sequence(lit(0), size(toks) - k),
-          i => concat_ws(" ", slice(toks, i + lit(1), lit(k))))))
-
   /** Word k-shingles — native single-pass expression
     * (graft.functions.WordShingles): the whole distinct shingle set
     * in one traversal of the token array. */
@@ -1125,8 +1113,10 @@ object Dedup {
     *
     * `driverGridMax`: the most RAW input rows of `edges` (duplicates
     * and both directions of an edge each count) that take the
-    * driver-side union-find path under `"auto"`; a larger or empty
-    * edge frame runs distributed, and 0 forces distributed.
+    * driver-side union-find path under `"auto"`, an empty edge frame
+    * included (it returns the empty (id, label) frame after the one
+    * probe job); a larger edge frame runs distributed, and 0 forces
+    * distributed.
     *
     * `algorithm`: `"labelprop"` (one-hop min propagation,
     * O(diameter) rounds, one shuffle join per round) or `"doubling"`
@@ -1179,12 +1169,7 @@ object Dedup {
     // always run distributed (they gate those algorithms — q317),
     // as does any grid over the cap or with an exotic key type.
     val rawEdges = edges.select(col(src).as("a"), col(dst).as("b"))
-    val driverType = rawEdges.schema("a").dataType match {
-      case org.apache.spark.sql.types.StringType |
-           org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType => true
-      case _ => false
-    }
+    val dt = rawEdges.schema("a").dataType
     // ONE action decides the altitude AND fetches the grid (r15 opt:
     // the old shape paid an eager lineage truncation plus a count
     // plus the collect — three driver jobs — before the first
@@ -1202,17 +1187,18 @@ object Dedup {
     // which path shifts (a duplicate-heavy frame now falls through to
     // the distributed loop, whose distinct absorbs the duplicates; an
     // already-distinct frame reaches the driver at up to 2× the old
-    // effective edge count). An EMPTY grid stays distributed so
-    // driverGridMax = 0 remains a true force-distributed escape
-    // hatch; an over-cap grid falls through to the distributed loop,
-    // whose eager truncation then happens exactly as before.
-    if (algorithm == "auto" && driverType && driverGridMax > 0) {
-      // collect-ok: bounded by limit(driverGridMax + 1) — this IS the
-      // altitude guard (the boundedGrid discipline, fused)
-      val grid = rawEdges.limit(driverGridMax + 1).collect()
-      if (grid.nonEmpty && grid.length <= driverGridMax)
-        return ccDriver(grid, rawEdges.schema("a").dataType,
-          rawEdges.sparkSession)
+    // effective edge count). An EMPTY grid is under the cap too: it
+    // returns the empty (id, label) frame after the probe, where the
+    // distributed loop would pay a truncation, a witness and a round
+    // to find nothing. driverGridMax = 0 skips the probe, so it stays
+    // a true force-distributed escape hatch; an over-cap grid falls
+    // through to the distributed loop, whose eager truncation then
+    // happens exactly as before.
+    if (algorithm == "auto" && ccDriverType(dt) && driverGridMax > 0) {
+      val grid = collectUnder(rawEdges, driverGridMax)
+      if (grid.isDefined)
+        return labelFrame(minRoots(grid.get.map(r => (r.get(0), r.get(1))),
+          dt), dt, rawEdges.sparkSession)
     }
     val e0 = rawEdges
       .unionByName(edges.select(col(dst).as("a"), col(src).as("b")))
@@ -1316,33 +1302,55 @@ object Dedup {
     labels
   }
 
-  /** Driver-altitude [[connectedComponents]]: union-find with
-    * path-halving over the collected RAW edge grid (duplicates,
-    * self-loops and direction are all absorbed — union is idempotent
-    * and direction-free — so the caller skips the symmetrize+distinct
-    * the distributed loop needs), roots kept at the component MINIMUM
-    * so the output is the same fixpoint every distributed algorithm
-    * converges to — (id, label = min member). Pure exact set logic,
-    * no floats: bit-identity
-    * with the distributed loop is structural, pinned by a parity
-    * spec anyway. String keys compare as unsigned UTF-8 bytes
-    * (Spark's binary string ordering), so a q297-shaped string graph
-    * gets the same minimum Spark's `min` would pick. */
-  private def ccDriver(gridRows: Array[org.apache.spark.sql.Row],
-      dt: org.apache.spark.sql.types.DataType,
-      spark: SparkSession): DataFrame = {
-    val ord: Ordering[Any] = dt match {
-      case org.apache.spark.sql.types.StringType =>
-        graft.ext.Guards.utf8Ordering.on[Any](_.asInstanceOf[String])
-      case _ => new Ordering[Any] {
-        def compare(x: Any, y: Any): Int = java.lang.Long.compare(
-          x.asInstanceOf[Number].longValue,
-          y.asInstanceOf[Number].longValue)
-      }
+  /** Key types the driver-altitude CC paths fold: their collected
+    * values are boxed Long/Integer/String, which [[minRoots]] orders
+    * the way Spark's `min` does. */
+  private def ccDriverType(dt: org.apache.spark.sql.types.DataType): Boolean =
+    dt match {
+      case org.apache.spark.sql.types.StringType |
+           org.apache.spark.sql.types.LongType |
+           org.apache.spark.sql.types.IntegerType => true
+      case _ => false
     }
-    val grid = gridRows.map(r => (r.get(0), r.get(1)))
+
+  /** `df`'s rows if it has at most `cap` of them, else None: the
+    * bounded collect every driver step of the CC paths takes — one
+    * job that fetches at most `cap + 1` rows, the size guard and the
+    * data in one action. */
+  private def collectUnder(df: DataFrame,
+      cap: Int): Option[Array[org.apache.spark.sql.Row]] = {
+    // collect-ok: bounded by limit(cap + 1) — this IS the altitude
+    // guard (the boundedGrid discipline, fused)
+    val rows = df.limit(cap + 1).collect()
+    if (rows.length <= cap) Some(rows) else None
+  }
+
+  /** Spark's order on collected [[ccDriverType]] keys: unsigned UTF-8
+    * bytes for strings, numeric order otherwise. */
+  private def keyOrdering(
+      dt: org.apache.spark.sql.types.DataType): Ordering[Any] = dt match {
+    case org.apache.spark.sql.types.StringType =>
+      graft.ext.Guards.utf8Ordering.on[Any](_.asInstanceOf[String])
+    case _ => Ordering.by[Any, Long](_.asInstanceOf[Number].longValue)
+  }
+
+  /** Driver-altitude connected components: union-find with path
+    * halving over `pairs`, every node → the MINIMUM member of its
+    * component under [[keyOrdering]]. Duplicates, self-loops and
+    * direction are all absorbed (union is idempotent and
+    * direction-free), so callers skip the symmetrize+distinct the
+    * distributed loop needs, and the result is the same fixpoint
+    * every distributed algorithm converges to (label = min member).
+    * Pure exact set logic: bit-identity with the distributed loop is
+    * structural, pinned by a parity spec anyway. String keys compare
+    * as unsigned UTF-8 bytes (Spark's binary string ordering), so a
+    * q297-shaped string graph gets the same minimum Spark's `min`
+    * would pick. */
+  private def minRoots(pairs: Iterable[(Any, Any)],
+      dt: org.apache.spark.sql.types.DataType): Map[Any, Any] = {
+    val ord = keyOrdering(dt)
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    grid.foreach { case (a, b) =>
+    pairs.foreach { case (a, b) =>
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
     }
     def find(x0: Any): Any = {
@@ -1353,14 +1361,21 @@ object Dedup {
       }
       x
     }
-    grid.foreach { case (a, b) =>
+    pairs.foreach { case (a, b) =>
       val ra = find(a); val rb = find(b)
       if (ra != rb) {
         if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
       }
     }
-    val rows = parent.keys.toSeq.sorted(ord)
-      .map(id => org.apache.spark.sql.Row(id, find(id)))
+    parent.keys.map(id => id -> find(id)).toMap
+  }
+
+  /** A local (id, label) relation of `dt` keys, rows in id order. */
+  private def labelFrame(labels: Map[Any, Any],
+      dt: org.apache.spark.sql.types.DataType,
+      spark: SparkSession): DataFrame = {
+    val rows = labels.toSeq.sortBy(_._1)(keyOrdering(dt))
+      .map { case (id, label) => org.apache.spark.sql.Row(id, label) }
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", dt),
       org.apache.spark.sql.types.StructField("label", dt)))
@@ -1732,6 +1747,20 @@ object Dedup {
     * identically, the q114/q171 incremental-maintenance contract).
     * Seed with an empty (id, label) frame for the first batch.
     *
+    * Driver altitude (`driverGridMax > 0`, Long/Integer/String keys):
+    * the fold takes three bounded collects instead — the new edges,
+    * `prev`'s labels of their endpoints (the touched components) and
+    * the touched components' members — each one narrow job fetching
+    * at most `driverGridMax + 1` rows, and no job when there is
+    * nothing to look up. A driver union-find over the new edges plus
+    * each member's (id, old label) pair gives every touched member
+    * and new id its min-member label. The result is `prev` minus the
+    * touched components, unioned with that local relation: no join,
+    * so the caller's checkpoint of it is one narrow job, and an empty
+    * batch costs the one edge collect. Any collect over the cap falls
+    * back to the distributed steps above, and `driverGridMax = 0`
+    * forces them.
+    *
     * CONTRACT on `prev`: labels must be the min member id of their
     * component — in particular labels ⊆ ids and disjoint from ids
     * the table has never seen. A caller seeding an arbitrary
@@ -1755,6 +1784,23 @@ object Dedup {
           "with connectedComponents output or an empty frame.")
     }
     val e = newEdges.select(col(src).as("na"), col(dst).as("nb"))
+    val dt = prev.schema("id").dataType
+    if (driverGridMax > 0 && ccDriverType(dt)) {
+      val p = prev.select(col("id"), col("label"))
+      val onDriver = for {
+        grid <- collectUnder(
+          e.select(col("na").cast(dt), col("nb").cast(dt)), driverGridMax)
+        pairs = grid.map(r => (r.get(0), r.get(1))).toSeq
+        known <- collectFor(pairs.flatMap(q => Seq(q._1, q._2)).distinct,
+          driverGridMax)(ends =>
+            p.filter(col("id").isInCollection(ends)).select(col("label")))
+        touched = known.map(_.get(0)).distinct.toSeq
+        members <- collectFor(touched, driverGridMax)(ls =>
+          p.filter(col("label").isInCollection(ls)))
+      } yield foldTouched(p, touched,
+        minRoots(pairs ++ members.map(r => (r.get(0), r.get(1))), dt), dt)
+      if (onDriver.isDefined) return onDriver.get
+    }
     // Both label lookups join the SAME unprojected frame (r16 opt):
     // with per-side alias projections (id→na / id→nb) the two
     // broadcast children canonicalize differently and Spark built the
@@ -1819,10 +1865,46 @@ object Dedup {
     * standing candidate indexes and the edge store itself (the q327
     * tombstone step) so later appends cannot pair against ghosts.
     * `removed` is a one-column ("id") frame; ids absent from prev
-    * are ignored. */
+    * are ignored.
+    *
+    * Driver altitude (`driverGridMax > 0`, Long/Integer/String keys):
+    * steps 1–4 run as up to four bounded collects — the removed ids,
+    * their labels in `prev` (the touched labels), the touched
+    * components' members and the standing edges among the survivors
+    * — each one narrow job fetching at most `driverGridMax + 1` rows,
+    * and no job when there is nothing to look up. A driver union-find
+    * folds the survivor edges, with isolated survivors as singletons,
+    * and the result is `prev` minus the touched labels, unioned with
+    * that local relation. A delete that touches no component (most
+    * deleted ids are in none) costs the first two collects — the
+    * first runs no job on a local `removed` — and returns `prev`'s
+    * rows. Any collect over the cap falls back to the distributed
+    * steps, and `driverGridMax = 0` forces them. */
   def ccDecrement(prev: DataFrame, edges: DataFrame, removed: DataFrame,
       src: String = "doc_a", dst: String = "doc_b",
       driverGridMax: Int = graft.ext.Guards.defaultDriverGridMax): DataFrame = {
+    val dt = prev.schema("id").dataType
+    if (driverGridMax > 0 && ccDriverType(dt)) {
+      val p = prev.select(col("id"), col("label"))
+      val onDriver = for {
+        remRows <- collectUnder(removed.select(col("id").cast(dt)),
+          driverGridMax)
+        gone = remRows.map(_.get(0)).toSet
+        known <- collectFor(gone.toSeq, driverGridMax)(ids =>
+          p.filter(col("id").isInCollection(ids)).select(col("label")))
+        touched = known.map(_.get(0)).distinct.toSeq
+        members <- collectFor(touched, driverGridMax)(ls =>
+          p.filter(col("label").isInCollection(ls)).select(col("id")))
+        survivors = members.map(_.get(0)).distinct.filterNot(gone).toSeq
+        sub <- collectFor(survivors, driverGridMax)(ids =>
+          edges.select(col(src).cast(dt).as("a"), col(dst).cast(dt).as("b"))
+            .filter(col("a").isInCollection(ids) &&
+              col("b").isInCollection(ids)))
+      } yield foldTouched(p, touched,
+        minRoots(sub.map(r => (r.get(0), r.get(1))).toSeq ++
+          survivors.map(id => (id, id)), dt), dt)
+      if (onDriver.isDefined) return onDriver.get
+    }
     val rem = removed.select(col("id"))
     val touchedLabels = prev.join(rem, Seq("id"), "left_semi")
       .select(col("label")).distinct()
@@ -1840,6 +1922,30 @@ object Dedup {
       .join(recomputed.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("label"))
     untouched.unionByName(recomputed).unionByName(isolated)
+  }
+
+  /** [[collectUnder]] over `rows(keys)`; no job when `keys` is empty
+    * (a driver fold step with nothing to look up). */
+  private def collectFor(keys: Seq[Any], cap: Int)(
+      rows: Seq[Any] => DataFrame): Option[Array[org.apache.spark.sql.Row]] =
+    if (keys.isEmpty) Some(Array.empty) else collectUnder(rows(keys), cap)
+
+  /** `p` (id, label) with the `touched` components replaced by the
+    * driver-folded `roots` (id → new label): a filter over `p` and a
+    * local relation, so materializing it is one narrow job. The union
+    * is coalesced to at most `spark.sql.shuffle.partitions`
+    * partitions: a standing table folded batch after batch would
+    * otherwise gain the local relation's partitions every batch, and
+    * each bounded collect over it scans `limit.initialNumPartitions`
+    * partitions per job. */
+  private def foldTouched(p: DataFrame, touched: Seq[Any],
+      roots: Map[Any, Any],
+      dt: org.apache.spark.sql.types.DataType): DataFrame = {
+    val kept =
+      if (touched.isEmpty) p else p.filter(!col("label").isInCollection(touched))
+    if (roots.isEmpty) kept
+    else kept.unionByName(labelFrame(roots, dt, p.sparkSession))
+      .coalesce(p.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
   }
 
   /** [[ccIncrement]] replayed over [[jaccardPairs]]'s edge set in

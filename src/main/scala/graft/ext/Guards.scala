@@ -35,8 +35,11 @@ object Guards {
     *   - `graft.driverGridMax` system property, then the
     *     `SPARK_GRAFT_DRIVER_GRID_MAX` env var, override everything
     *     (0 = force-distributed everywhere — the escape hatch the
-    *     parity specs rely on stays honored because the altitude
-    *     switches gate on `count <= driverGridMax` with count > 0);
+    *     parity specs rely on stays honored because every altitude
+    *     switch gates on `driverGridMax > 0` before it probes: the
+    *     graph loops take the driver on `0 < count <= driverGridMax`,
+    *     and the CC paths on any probe collect of at most
+    *     `driverGridMax` rows, an empty one included);
     *   - otherwise the sizing rule: a collected grid row costs
     *     ~512 heap bytes (Row object + boxed fields + the loop's map
     *     entries), and a loop may hold ~3 grid-sized structures, so
@@ -47,10 +50,12 @@ object Guards {
     *     raises the collect bound; less heap lowers it).
     *
     * Unit: rows the caller's altitude probe collects. For
-    * [[graft.ext.Dedup.connectedComponents]] (and so ccIncrement,
-    * ccDecrement and every dedup composition) that is RAW input edge
-    * rows — a duplicate row and each direction of an edge count once
-    * each — not distinct undirected edges; the graph loops
+    * [[graft.ext.Dedup.connectedComponents]] (and so every dedup
+    * composition) that is RAW input edge rows — a duplicate row and
+    * each direction of an edge count once each — not distinct
+    * undirected edges; ccIncrement and ccDecrement apply the cap to
+    * each of their driver collects (new edges, touched labels,
+    * touched members, survivor edges); the graph loops
     * (pageRank, HITS, k-core, BFS, TextRank) collect the edge grid
     * they have already built.
     */

@@ -99,7 +99,7 @@ class PropertiesSpec extends AnyFunSuite {
       val df = group.map(_._1).toSeq.toDF("toks")
       val rows = df.select(
         graft.functions.exprs.word_shingles(col("toks"), k).as("native"),
-        graft.ext.Dedup.shinglesFromTokensHof(col("toks"), k).as("hof")).collect()
+        graft.ext.ReferenceTwins.shinglesFromTokensHof(col("toks"), k).as("hof")).collect()
       rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
     }
   }
@@ -217,6 +217,50 @@ class PropertiesSpec extends AnyFunSuite {
       val inc = labels.collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(inc == oneShot, s"edges=$edges nBatches=$nBatches")
+    }
+  }
+
+  test("ccIncrement + ccDecrement folded over random adds and deletes equal one-shot CC of the surviving graph, at any cap") {
+    val spark = TestSpark.init()
+    import spark.implicits._
+    // each batch adds random edges, then deletes random ids (the CDC
+    // maintainers' order). The reference is the distributed one-shot
+    // CC of the surviving edge store, plus a singleton for every id
+    // still standing with no surviving edge. The default cap folds on
+    // the driver; 0 forces the distributed steps; 2 passes the first
+    // collect of a small batch and falls back at a later one once a
+    // touched component has grown past two members.
+    val batchGen = Gen.zip(
+      Gen.choose(0, 4).flatMap(n =>
+        Gen.listOfN(n, Gen.zip(Gen.choose(1L, 10L), Gen.choose(1L, 10L)))),
+      Gen.choose(0, 2).flatMap(n => Gen.listOfN(n, Gen.choose(1L, 10L))))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    forSamples(Gen.listOfN(4, batchGen), 5) { batches =>
+      var store = Seq.empty[(Long, Long)]
+      var standing = Set.empty[Long]
+      for ((adds, dels) <- batches) {
+        store ++= adds
+        standing ++= adds.flatMap(e => Seq(e._1, e._2))
+        store = store.filterNot(e => dels.contains(e._1) || dels.contains(e._2))
+        standing --= dels
+      }
+      val linked = rows(graft.ext.Dedup.connectedComponents(
+        store.toDF("doc_a", "doc_b"), driverGridMax = 0))
+      val want = (linked ++ (standing -- linked.map(_._1)).map(id => (id, id))).sorted
+      for (cap <- Seq(graft.ext.Guards.defaultDriverGridMax, 0, 2)) {
+        var labels = Seq.empty[(Long, Long)].toDF("id", "label")
+        var edges = Seq.empty[(Long, Long)]
+        for ((adds, dels) <- batches) {
+          edges ++= adds
+          labels = graft.ext.Dedup.ccIncrement(labels, adds.toDF("doc_a", "doc_b"),
+            driverGridMax = cap).localCheckpoint(eager = true)
+          edges = edges.filterNot(e => dels.contains(e._1) || dels.contains(e._2))
+          labels = graft.ext.Dedup.ccDecrement(labels, edges.toDF("doc_a", "doc_b"),
+            dels.toDF("id"), driverGridMax = cap).localCheckpoint(eager = true)
+        }
+        assert(rows(labels) == want, s"cap=$cap batches=$batches")
+      }
     }
   }
 

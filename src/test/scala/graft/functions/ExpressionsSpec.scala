@@ -108,7 +108,7 @@ class ExpressionsSpec extends AnyFunSuite {
       5L -> ("日本語のテキスト と spaces " * 7))
     val media = payloads.toDF("media_id", "txt")
       .select(col("media_id"), col("txt").cast("binary").as("payload"))
-    val composed = graft.ext.Multimodal.perceptualHashComposed(media)
+    val composed = graft.ext.ReferenceTwins.perceptualHashComposed(media)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val native = media
       .select(col("media_id"),
@@ -117,7 +117,7 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(native == composed)
     // corpus sweep: the real media table, every row identical
     val sfMedia = graft.ext.Multimodal.mediaTable(spark, TestSpark.sf)
-    val c2 = graft.ext.Multimodal.perceptualHashComposed(sfMedia)
+    val c2 = graft.ext.ReferenceTwins.perceptualHashComposed(sfMedia)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val n2 = graft.ext.Multimodal
       .perceptualHash(spark, TestSpark.sf)
@@ -258,7 +258,7 @@ class ExpressionsSpec extends AnyFunSuite {
       Seq.empty[String]).toDF("toks")
     val rows = df.select(
       exprs.word_shingles(col("toks"), 3).as("native"),
-      graft.ext.Dedup.shinglesFromTokensHof(col("toks"), 3).as("hof")).collect()
+      graft.ext.ReferenceTwins.shinglesFromTokensHof(col("toks"), 3).as("hof")).collect()
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
     assert(rows(0).getSeq[String](0) == Seq("a b c", "b c d"))
     assert(rows(1).getSeq[String](0) == Seq("a b"))
@@ -267,13 +267,13 @@ class ExpressionsSpec extends AnyFunSuite {
     // null array → null in both forms
     val nul = Seq(Tuple1(null: Seq[String])).toDF("toks").select(
       exprs.word_shingles(col("toks"), 3).as("native"),
-      graft.ext.Dedup.shinglesFromTokensHof(col("toks"), 3).as("hof")).collect()
+      graft.ext.ReferenceTwins.shinglesFromTokensHof(col("toks"), 3).as("hof")).collect()
     assert(nul.head.isNullAt(0) && nul.head.isNullAt(1))
     // and identical over every real tokenized document
     val docs = graft.Tables.documents(spark, graft.TestSpark.sf)
       .select(graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
       .select(exprs.word_shingles(col("toks"), 3).as("native"),
-        graft.ext.Dedup.shinglesFromTokensHof(col("toks"), 3).as("hof"))
+        graft.ext.ReferenceTwins.shinglesFromTokensHof(col("toks"), 3).as("hof"))
       .collect()
     assert(docs.length == 500)
     docs.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))

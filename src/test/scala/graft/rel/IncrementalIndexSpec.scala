@@ -186,6 +186,37 @@ class IncrementalIndexSpec extends AnyFunSuite {
       == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
+  test("connectedComponents on an empty edge frame: one probe job under auto, the distributed loop at driverGridMax = 0") {
+    // two partitions with no rows: collecting it runs a job (a frame
+    // with no partitions would not)
+    val empty = spark.range(0, 4, 1, 2).filter(col("id") < 0L)
+      .select(col("id").as("doc_a"), col("id").as("doc_b"))
+    val (auto, autoJobs) = TestSpark.countJobs(
+      Dedup.connectedComponents(empty).collect())
+    assert(auto.isEmpty && autoJobs == 1)
+    val (loop, loopJobs) = TestSpark.countJobs(
+      Dedup.connectedComponents(empty, driverGridMax = 0))
+    // the eager truncation, the initial witness and one round's witness
+    assert(loopJobs >= 3)
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType)
+    assert(shape(Dedup.connectedComponents(empty)) == shape(loop))
+  }
+
+  test("ccDecrement with removed ids absent from prev returns prev's rows after one job") {
+    import spark.implicits._
+    val prev = Dedup.connectedComponents(
+        Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b"))
+      .localCheckpoint(eager = true)
+    // the removed ids are a local relation (no job to collect); the
+    // touched-label lookup over prev finds none and stops there
+    val (out, jobs) = TestSpark.countJobs(Dedup.ccDecrement(prev,
+      Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"), Seq(5L, 99L).toDF("id")))
+    assert(jobs == 1)
+    assert(out.collect().toSeq.sortBy(_.getLong(0)) ==
+      prev.collect().toSeq.sortBy(_.getLong(0)))
+  }
+
   test("entity resolution with deletes equals one-shot q184 over the shrunk corpus") {
     // the oracle twin: same predicate the q327 registration uses
     val removedPred = pmod(col("c_custkey"), lit(7L)) === 3L &&

@@ -972,7 +972,7 @@ class OperatorsSpec extends AnyFunSuite {
       val mp = graft.ext.Multimodal.resizeStubOf(media).collect()
         .map(r => r.getLong(0) ->
           ((r.getInt(1), r.getSeq[Int](2).toList))).toMap
-      val tw = graft.ext.Multimodal.resizeTwinOf(media).collect()
+      val tw = graft.ext.ReferenceTwins.resizeTwinOf(media).collect()
         .map(r => r.getLong(0) ->
           ((r.getInt(1), r.getSeq[Int](2).toList))).toMap
       (mp, tw)

@@ -704,17 +704,21 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(streamed.map(_._1).toSet.intersect(reAdded).nonEmpty)
   }
 
-  // Spark jobs one add-only micro-batch runs on fresh stores. The
-  // append paths' results are filters over checkpoints their witness
-  // probe already materialized; an eager checkpoint of them on top
-  // (what both maintainers used to take) is one more job: 21 and 30.
-  private def addBatchJobs(
+  // Spark jobs one micro-batch runs. An add-only batch on fresh stores:
+  // the append paths' results are filters over checkpoints their
+  // witness probe already materialized (an eager checkpoint of them on
+  // top was one more job), and the CC fold collects the new edges and
+  // checkpoints the labels (the distributed quotient fold made the
+  // batch 20 and 29 jobs). A delete batch removes one id in a
+  // component and one in none, so the driver fold takes every step
+  // (the distributed fold made it 38 and 26 jobs).
+  private def batchJobs(
       writer: org.apache.spark.sql.streaming.DataStreamWriter[_],
       base: String): Int =
     TestSpark.countJobs(writer.option("checkpointLocation", base + "/ckpt")
       .start().awaitTermination())._2
 
-  test("er CDC stream: one add batch runs 20 Spark jobs (erAppendEdges' result is not checkpointed again)") {
+  private def erStream(tag: String) = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val recs = graft.Tables.customer(spark, TestSpark.sf)
@@ -722,31 +726,65 @@ class StreamOpsSpec extends AnyFunSuite {
         col("c_nationkey"), col("c_mktsegment")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getString(3), "add"))
       .toSeq
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-er-jobs").toString
+    val base = java.nio.file.Files.createTempDirectory(tag).toString
     val src = MemoryStream[(Long, String, Int, String, String)]
-    val (writer, _) = StreamOps.erMaintainCdcStream(
+    val (writer, current) = StreamOps.erMaintainCdcStream(
       src.toDS().toDF("c_custkey", "c_name", "c_nationkey",
         "c_mktsegment", "op"),
       base + "/idx", base + "/edges", base + "/tombs")
     src.addData(recs)
-    assert(addBatchJobs(writer, base) == 20)
+    (writer, current, base, recs.map(_._1),
+      (ids: Seq[Long]) => src.addData(ids.map(id => (id, "", 0, "", "delete"))))
   }
 
-  test("lsh CDC stream: one add batch runs 29 Spark jobs (lshAppendCandidates' result is not checkpointed again)") {
+  private def lshStream(tag: String) = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val docs = graft.Tables.documents(spark, TestSpark.sf)
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1), "add")).toSeq
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-lsh-jobs").toString
+    val base = java.nio.file.Files.createTempDirectory(tag).toString
     val src = MemoryStream[(Long, String, String)]
-    val (writer, _) = StreamOps.lshMaintainCdcStream(
+    val (writer, current) = StreamOps.lshMaintainCdcStream(
       src.toDS().toDF("doc_id", "text", "op"),
       base + "/idx", base + "/sh", base + "/edges", base + "/tombs")
     src.addData(docs)
-    assert(addBatchJobs(writer, base) == 29)
+    (writer, current, base, docs.map(_._1),
+      (ids: Seq[Long]) => src.addData(ids.map(id => (id, "", "delete"))))
+  }
+
+  // after the add batch: the least id in a multi-member component and
+  // the least id in none
+  private def oneInOneOut(current: () => org.apache.spark.sql.DataFrame,
+      ids: Seq[Long]): Seq[Long] = {
+    val labels = current().collect().map(r => r.getLong(0) -> r.getLong(1))
+    val inComponent = labels.filter(l => l._1 != l._2).map(_._1)
+    assert(inComponent.nonEmpty, "fixture: the add batch clustered nothing")
+    Seq(inComponent.min, ids.filterNot(labels.map(_._1).toSet).min)
+  }
+
+  test("er CDC stream: one add batch runs 18 Spark jobs (erAppendEdges' result is not checkpointed again; the CC fold runs on the driver)") {
+    val (writer, _, base, _, _) = erStream("graft-er-jobs")
+    assert(batchJobs(writer, base) == 18)
+  }
+
+  test("lsh CDC stream: one add batch runs 27 Spark jobs (lshAppendCandidates' result is not checkpointed again; the CC fold runs on the driver)") {
+    val (writer, _, base, _, _) = lshStream("graft-lsh-jobs")
+    assert(batchJobs(writer, base) == 27)
+  }
+
+  test("er CDC stream: one delete batch runs 15 Spark jobs (the CC fold collects only the touched component)") {
+    val (writer, current, base, ids, delete) = erStream("graft-er-del-jobs")
+    batchJobs(writer, base)
+    delete(oneInOneOut(current, ids))
+    assert(batchJobs(writer, base) == 15)
+  }
+
+  test("lsh CDC stream: one delete batch runs 15 Spark jobs (the CC fold collects only the touched component)") {
+    val (writer, current, base, ids, delete) = lshStream("graft-lsh-del-jobs")
+    batchJobs(writer, base)
+    delete(oneInOneOut(current, ids))
+    assert(batchJobs(writer, base) == 15)
   }
 
   test("er CDC stream: periodic fold bounds stores, keeps parity, and re-admits after compaction") {
