@@ -333,16 +333,11 @@ object Dedup {
   def lshAppendCandidates(newKeys: DataFrame, indexKeys: DataFrame,
       maxBucket: Int, pruneTouched: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // GUARD FUSION (r15 — one pass over the touched index instead of
-    // a guard aggregation plus a separate candidate join; the
-    // [[graft.ext.Linkage.erAppendEdges]] scaladoc has the full
-    // argument incl. why a standing count table measured WORSE):
-    // rank docs within each touched (band, bucket), truncate at
-    // maxBucket+1 so the pass stays bounded even against a
-    // degenerate bucket, checkpoint, guard on max(rank) from the
-    // materialized frame, and feed the SAME frame — already
-    // partitioned on the join key by the window — to the candidate
-    // join.
+    // GUARD FUSION (r15, the erAppendEdges design): rank docs within
+    // each touched (band, bucket), truncate at maxBucket+1 so the pass
+    // stays bounded even against a degenerate bucket, and feed the
+    // ranked frame — already partitioned on the join key by the
+    // window — to the candidate join.
     val w = Window.partitionBy(col("band"), col("bucket"))
       .orderBy(col("doc_id"))
     // pruneTouched (r15 opt, TRICKLE paths only): restrict the index
@@ -360,23 +355,11 @@ object Dedup {
           .join(newKeys.select(col("band"), col("bucket")).distinct(),
             Seq("band", "bucket"), "left_semi")
       else indexKeys.select(col("band"), col("bucket"), col("doc_id"))
-    // rank + truncate at cap+1 keeps the pass bounded against a
-    // degenerate bucket; the surviving rank column is the guard
-    // witness
     val bounded = probed
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= maxBucket + 1)
-    // ONE action per append (r16 opt — the erAppendEdges scaladoc has
-    // the full argument): the guard WITNESS rides the candidate join.
-    // rank-(cap+1) rows of touched buckets bypass the pair filter and
-    // land in the checkpointed output as marker rows (w = true), so
-    // the fail-fast is a near-free filter probe over local
-    // checkpointed blocks instead of its own witness job — and with
-    // one consumer of the ranked frame the r15 persist (and its
-    // memory pressure) disappears. On a healthy corpus no marker row
-    // exists and the output is the old candidate set exactly; on
-    // violation the require throws before any caller sees the
-    // candidates, with the join bounded by the rank truncation.
+    // the rank-(cap+1) rows bypass the pair filter as marker rows,
+    // so the guard rides the candidate join ([[Guards.witnessed]])
     val cands = newKeys.select(col("band"), col("bucket"),
         col("doc_id").as("na"))
       .join(bounded.select(col("band"), col("bucket"),
@@ -386,18 +369,10 @@ object Dedup {
         greatest(col("na"), col("nb")).as("doc_b"),
         (col("rn") === maxBucket + 1).as("w"))
       .distinct()
-      // LAZY: the witness probe below is the materializing action —
-      // block unroll persists full partitions under the take-probe,
-      // so a dedicated checkpoint job would be pure overhead (r16 opt)
-      .localCheckpoint(eager = false)
-    // collect-ok: bounded by limit(1) — witness probe; doubles as the
-    // checkpoint materialization (scans every partition by design)
-    val violated = cands.filter(col("w")).limit(1).collect()
-    require(violated.isEmpty,
+    Guards.witnessed(cands,
       s"lshAppendCandidates: a touched (band, bucket) holds > " +
         s"maxBucket=$maxBucket docs — the append path has no " +
         "star/salt fallback; dedup exact content first or raise the cap")
-    cands.filter(!col("w")).select(col("doc_a"), col("doc_b"))
   }
 
   private val verifiedCache =
@@ -536,61 +511,29 @@ object Dedup {
   def lshDedupClustersIncremental(spark: SparkSession, dir: String,
       k: Int = 3, threshold: Double = 0.7, bands: Int = 8,
       rowsPerBand: Int = 4, maxBucket: Int = 256,
-      nBatches: Int = 3): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    // the standing stores are UNIONS OF CHECKPOINTED BATCH PIECES —
-    // never a re-checkpoint of the union, which would re-materialize
-    // the WHOLE store every batch (O(corpus) per batch instead of
-    // O(batch); the parquet-store production form appends the same
-    // way). The union plan stays nBatches leaves deep — flat.
-    var shPieces = Seq.empty[DataFrame]
-    var keyPieces = Seq.empty[DataFrame]
-    var labels = docs
-      .select(col("doc_id").as("id"), col("doc_id").as("label")).limit(0)
-    for (b <- 0 until nBatches) {
-      val newSh = shingleRowsFor(
-        docs.filter(pmod(col("doc_id"), lit(nBatches.toLong)) === b), k)
-        .localCheckpoint(eager = false)
-      val newKeys = lshBandKeys(
-        newSh.select(col("doc_id"),
-          graft.functions.exprs.minhash_sig_portable(col("sh"),
-            bands * rowsPerBand).as("sig")),
-        bands, rowsPerBand, compressBuckets = false)
-        .localCheckpoint(eager = false)
-      shPieces :+= newSh
-      keyPieces :+= newKeys
-      val edges = verifyPairs(shPieces.reduce(_ unionByName _),
-        lshAppendCandidates(newKeys, keyPieces.reduce(_ unionByName _),
-          maxBucket), threshold)
-      // lazy: materializes inside the next batch's first action
-      // (the quotient grid collect touches every label partition)
-      labels = ccIncrement(labels, edges).localCheckpoint(eager = false)
-    }
-    labels.select(col("id").as("doc_id"), col("label").as("rep_id"))
-  }
+      nBatches: Int = 3): DataFrame =
+    lshReplay(Tables.documents(spark, dir), k, threshold, bands,
+      rowsPerBand, maxBucket, nBatches, None)
 
   /** [[lshDedupClustersIncremental]] plus the DELETE half of the
     * lifecycle — q328, the [[graft.ext.Linkage
     * .entityResolutionWithDeletes]] discipline applied to the LSH
-    * near-dup family: add the first (nBatches−1) doc batches
-    * (retaining the verified edge sets — deletion-capable state),
-    * tombstone every already-ingested doc_id ≡ deleteRes (mod
-    * deleteMod) out of the shingle store, the band-key index, and
-    * the edge store, fold the labels through [[ccDecrement]], then
-    * ingest the LAST batch against the tombstoned stores (its
-    * candidates must not resurrect ghosts; its new docs may re-match
-    * singleton survivors). Output drops singleton components to
-    * match the one-shot contract. Hash-gated by q59's oracle over
+    * near-dup family on the [[Replay]] add/delete/add schedule: the
+    * tombstone batch drops every already-ingested doc_id ≡ deleteRes
+    * (mod deleteMod) from the shingle store, the band-key index and
+    * the (retained) edge store, and folds the labels through
+    * [[ccDecrement]]; the last batch's candidates cannot resurrect
+    * ghosts, and its new docs may re-match singleton survivors.
+    * Output drops singleton components to match the one-shot
+    * contract. Hash-gated by q59's oracle over
     * the SHRUNK corpus. */
   def lshDedupClustersWithDeletes(spark: SparkSession, dir: String,
       k: Int = 3, threshold: Double = 0.7, bands: Int = 8,
       rowsPerBand: Int = 4, maxBucket: Int = 256, nBatches: Int = 3,
-      deleteMod: Int = 7, deleteRes: Int = 3): DataFrame = {
-    require(nBatches >= 2, "need at least one add batch after the deletes")
-    val docs = Tables.documents(spark, dir)
-    runLshReplayWithDeletes(docs, k, threshold, bands, rowsPerBand,
-      maxBucket, nBatches, deleteMod, deleteRes, reAdd = false)
-  }
+      deleteMod: Int = 7, deleteRes: Int = 3): DataFrame =
+    lshReplay(Tables.documents(spark, dir), k, threshold, bands,
+      rowsPerBand, maxBucket, nBatches,
+      Some(Replay.Deletes(deleteMod, deleteRes, reAdd = false)))
 
   /** [[lshDedupClustersWithDeletes]] plus the RE-ADD verb — q330,
     * the LSH twin of [[graft.ext.Linkage.entityResolutionWithReAdds]]
@@ -607,73 +550,70 @@ object Dedup {
   def lshDedupClustersWithReAdds(spark: SparkSession, dir: String,
       k: Int = 3, threshold: Double = 0.7, bands: Int = 8,
       rowsPerBand: Int = 4, maxBucket: Int = 256, nBatches: Int = 3,
-      deleteMod: Int = 7, deleteRes: Int = 3): DataFrame = {
-    require(nBatches >= 2, "need at least one add batch after the deletes")
-    val docs = Tables.documents(spark, dir)
-    runLshReplayWithDeletes(docs, k, threshold, bands, rowsPerBand,
-      maxBucket, nBatches, deleteMod, deleteRes, reAdd = true)
-  }
+      deleteMod: Int = 7, deleteRes: Int = 3): DataFrame =
+    lshReplay(Tables.documents(spark, dir), k, threshold, bands,
+      rowsPerBand, maxBucket, nBatches,
+      Some(Replay.Deletes(deleteMod, deleteRes, reAdd = true)))
 
-  /** The shared add/delete[/re-add] LSH replay of q328/q330. */
-  private def runLshReplayWithDeletes(docs: DataFrame, k: Int,
-      threshold: Double, bands: Int, rowsPerBand: Int, maxBucket: Int,
-      nBatches: Int, deleteMod: Int, deleteRes: Int,
-      reAdd: Boolean): DataFrame = {
+  /** The LSH family's replay body (q324, q328, q330). Standing
+    * stores are unions of checkpointed batch pieces — never a
+    * re-checkpoint of the union, which would re-materialize the
+    * WHOLE store every batch (O(corpus) per batch instead of
+    * O(batch); the parquet-store production form appends the same
+    * way). Checkpoints are lazy: each materializes inside its first
+    * consumer's action (the labels inside the next batch's quotient
+    * collect). The verified edges are checkpointed only when the
+    * schedule deletes, since only a delete reads them again. */
+  private def lshReplay(docs: DataFrame, k: Int, threshold: Double,
+      bands: Int, rowsPerBand: Int, maxBucket: Int, nBatches: Int,
+      deletes: Option[Replay.Deletes]): DataFrame = {
     var shPieces = Seq.empty[DataFrame]
     var keyPieces = Seq.empty[DataFrame]
     var edgePieces = Seq.empty[DataFrame]
     var labels = docs
       .select(col("doc_id").as("id"), col("doc_id").as("label")).limit(0)
-    def addBatch(docsBatch: DataFrame): Unit = {
-      val newSh = shingleRowsFor(docsBatch, k)
-        .localCheckpoint(eager = false)
-      val newKeys = lshBandKeys(
-        newSh.select(col("doc_id"),
-          graft.functions.exprs.minhash_sig_portable(col("sh"),
-            bands * rowsPerBand).as("sig")),
-        bands, rowsPerBand, compressBuckets = false)
-        .localCheckpoint(eager = false)
-      shPieces :+= newSh
-      keyPieces :+= newKeys
-      val edges = verifyPairs(shPieces.reduce(_ unionByName _),
+    Replay.run(docs, "doc_id", nBatches, deletes)(
+      add = { batch =>
+        val newSh = shingleRowsFor(batch, k).localCheckpoint(eager = false)
+        val newKeys = lshBandKeys(
+          newSh.select(col("doc_id"),
+            graft.functions.exprs.minhash_sig_portable(col("sh"),
+              bands * rowsPerBand).as("sig")),
+          bands, rowsPerBand, compressBuckets = false)
+          .localCheckpoint(eager = false)
+        shPieces :+= newSh
+        keyPieces :+= newKeys
+        val verified = verifyPairs(shPieces.reduce(_ unionByName _),
           lshAppendCandidates(newKeys, keyPieces.reduce(_ unionByName _),
             maxBucket), threshold)
-        .localCheckpoint(eager = false)
-      edgePieces :+= edges
-      // lazy: materializes inside the next batch's first action
-      // (the quotient grid collect touches every label partition)
-      labels = ccIncrement(labels, edges).localCheckpoint(eager = false)
+        val edges =
+          if (deletes.isDefined) verified.localCheckpoint(eager = false)
+          else verified
+        edgePieces :+= edges
+        labels = ccIncrement(labels, edges).localCheckpoint(eager = false)
+      },
+      delete = { removed =>
+        shPieces = Seq(Replay.drop(shPieces.reduce(_ unionByName _),
+          removed, "doc_id").localCheckpoint(eager = false))
+        keyPieces = Seq(Replay.drop(keyPieces.reduce(_ unionByName _),
+          removed, "doc_id").localCheckpoint(eager = false))
+        val edgeStore = edgePieces.reduce(_ unionByName _)
+        labels = ccDecrement(labels, edgeStore, removed)
+          .localCheckpoint(eager = false)
+        edgePieces = Seq(Replay.drop(edgeStore, removed, "doc_a", "doc_b")
+          .localCheckpoint(eager = false))
+      })
+    val out = labels.select(col("id").as("doc_id"), col("label").as("rep_id"))
+    if (deletes.isEmpty) out
+    else {
+      // drop the singleton survivors of the delete in ONE exchange
+      // (r16 opt, the entityOutput r15 recipe): a count window over
+      // the label partition, whose partitions are near-dup cliques,
+      // never corpus-sized, so the window is skew-safe at any scale
+      val wn = org.apache.spark.sql.expressions.Window.partitionBy(col("rep_id"))
+      out.withColumn("n", count(lit(1)).over(wn))
+        .filter(col("n") > 1).drop("n")
     }
-    def modBatch(b: Int): DataFrame =
-      docs.filter(pmod(col("doc_id"), lit(nBatches.toLong)) === b)
-    (0 until nBatches - 1).foreach(b => addBatch(modBatch(b)))
-    val removedDocs = docs
-      .filter(pmod(col("doc_id"), lit(deleteMod.toLong)) === deleteRes &&
-        pmod(col("doc_id"), lit(nBatches.toLong)) =!= (nBatches - 1))
-      .localCheckpoint(eager = false)
-    val removed = removedDocs.select(col("doc_id").as("id"))
-    def dropIds(df: DataFrame, idCol: String): DataFrame =
-      df.join(removed.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-    shPieces = Seq(dropIds(shPieces.reduce(_ unionByName _), "doc_id")
-      .localCheckpoint(eager = false))
-    keyPieces = Seq(dropIds(keyPieces.reduce(_ unionByName _), "doc_id")
-      .localCheckpoint(eager = false))
-    val edgeStore = edgePieces.reduce(_ unionByName _)
-    labels = ccDecrement(labels, edgeStore, removed)
-      .localCheckpoint(eager = false)
-    edgePieces = Seq(dropIds(dropIds(edgeStore, "doc_a"), "doc_b")
-      .localCheckpoint(eager = false))
-    addBatch(modBatch(nBatches - 1))
-    if (reAdd) addBatch(removedDocs)
-    // ONE exchange (r16 opt, the entityOutput r15 recipe): a count
-    // window over the label partition replaces the groupBy + join-back
-    // (aggregate shuffle plus a second pass over the label table).
-    // Partition sizes are component sizes — near-dup cliques, never
-    // corpus-sized — so the window is skew-safe at any scale.
-    val wn = org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
-    labels.select(col("id").as("doc_id"), col("label").as("rep_id"),
-        count(lit(1)).over(wn).as("n"))
-      .filter(col("n") > 1).drop("n")
   }
 
   // -----------------------------------------------------------------
@@ -1960,11 +1900,12 @@ object Dedup {
     val edges = jaccardPairs(spark, dir, maxId, threshold)
       .localCheckpoint(eager = false)
     var labels = Seq.empty[(Long, Long)].toDF("id", "label")
-    for (b <- 0 until nBatches) {
-      labels = ccIncrement(labels,
-          edges.filter(pmod(col("doc_a"), lit(nBatches.toLong)) === b))
-        .localCheckpoint(eager = false) // lazy — the replay-loop note
-    }
+    // lazy: each checkpoint materializes inside the next batch's
+    // first action
+    Replay.run(edges, "doc_a", nBatches, None)(
+      add = batch =>
+        labels = ccIncrement(labels, batch).localCheckpoint(eager = false),
+      delete = _ => ())
     labels.select(col("id").as("doc_id"), col("label").as("rep_id"))
   }
 
@@ -2466,23 +2407,13 @@ object Dedup {
   def simhashAppendValuePairs(newVKeys: DataFrame, vkeyStore: DataFrame,
       maxDist: Int = 3, maxBucket: Int = 4096): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // ONE action per append (r16 opt — the erAppendEdges/
-    // lshAppendCandidates witness-marker discipline): the old shape
-    // paid a dedicated guard job per batch (touched-bucket distinct +
-    // countDistinct aggregate + head) and then scanned the store a
-    // SECOND time for the value-pair join, which dedup'd (va, vb)
-    // only AFTER the join fan-out. dense_rank over the bucket
-    // partition ranks DISTINCT values directly on the raw store rows
-    // (a value re-appearing across batches keeps its rank), so one
-    // pass both bounds the join (rank ≤ cap+1 — a degenerate bucket
-    // stays O(cap) per bucket) and carries the guard witness: the
-    // rank-(cap+1) rows bypass the hamming filter into the
-    // checkpointed output as marker rows, and the fail-fast is a
-    // near-free probe over local blocks. Same guard semantics (cap on
-    // DISTINCT values per TOUCHED bucket — a witness row joins iff
-    // its bucket joins a new key), same output (dedupe before the
-    // hamming filter is dedupe after it, hamming is a function of the
-    // pair).
+    // dense_rank over the bucket partition ranks DISTINCT values
+    // directly on the raw store rows (a value re-appearing across
+    // batches keeps its rank), so one pass both bounds the join
+    // (rank <= cap+1 — a degenerate bucket stays O(cap)) and carries
+    // the [[Guards.witnessed]] markers: the rank-(cap+1) rows bypass
+    // the hamming filter. Dedupe before the hamming filter is dedupe
+    // after it (hamming is a function of the pair).
     val w = Window.partitionBy(col("band"), col("bucket"))
       .orderBy(col("v"))
     val bounded = vkeyStore.select(col("band"), col("bucket"), col("v"))
@@ -2497,17 +2428,10 @@ object Dedup {
       .select(col("va"), col("vb"), col("hamming"),
         (col("rn") === maxBucket + 1).as("w"))
       .distinct()
-      // LAZY: the witness probe below materializes every partition
-      // (block unroll is all-or-nothing per partition)
-      .localCheckpoint(eager = false)
-    // collect-ok: bounded by limit(1) — witness probe; doubles as the
-    // checkpoint materialization (scans every partition by design)
-    val violated = pairs.filter(col("w")).limit(1).collect()
-    require(violated.isEmpty,
+    Guards.witnessed(pairs,
       s"simhash append: a touched (band, bucket) holds more than " +
         s"maxBucket=$maxBucket DISTINCT simhash values " +
         "— raise the cap or widen the bands")
-    pairs.filter(!col("w")).select(col("va"), col("vb"), col("hamming"))
   }
 
   /** Member expansion of [[simhashAppendValuePairs]] output: new
@@ -2542,55 +2466,9 @@ object Dedup {
     * materialization, the q324 replay lesson. */
   def simhashNearDupIncremental(spark: SparkSession, dir: String,
       bits: Int = 48, bands: Int = 4, maxDist: Int = 3,
-      maxBucket: Int = 4096, nBatches: Int = 3): DataFrame = {
-    // maxBucket here caps DISTINCT VALUES per band bucket (not docs —
-    // the quotient already absorbed duplicate volume): per-bucket
-    // value-pair work is n², so 4096 bounds a touched bucket at ~17M
-    // cheap (long, long) comparisons before the hamming filter; the
-    // 12-bit band slices are token-bias-skewed enough that a 5k-doc
-    // corpus already puts 331 distinct values in its hottest bucket
-    val docs = Tables.documents(spark, dir)
-    // VALUE-QUOTIENT (the q325 lesson, which this family needs even
-    // more: a dup-heavy corpus piles one simhash VALUE into a band
-    // bucket — 338 docs in one bucket at sf0.1 already — and the
-    // append path has no star/salt fallback, so doc-level banding
-    // fail-fasts where the one-shot silently degrades). A doc's
-    // bands are fully determined by its sh value, so banding over
-    // DISTINCT values is the SAME pairing relation, quotiented:
-    //   - value pairs (va, vb) sharing a band, hamming ≤ maxDist —
-    //     bucket sizes are distinct-value counts, duplicate volume
-    //     can't blow them up;
-    //   - member expansion (new docs of va × stored docs of vb, plus
-    //     same-value pairs at hamming 0) is OUTPUT-sized — those
-    //     pairs are answer rows, not intermediate state.
-    // Union over batches = the one-shot pair set (each pair emits
-    // when its later member arrives) — q46's oracle gates it.
-    var sigPieces = Seq.empty[DataFrame]
-    var vkeyPieces = Seq.empty[DataFrame]
-    var out: DataFrame = null
-    for (b <- 0 until nBatches) {
-      val newSigs = simhashRowsPortable(
-        docs.filter(pmod(col("doc_id"), lit(nBatches.toLong)) === b), bits)
-        .localCheckpoint(eager = false)
-      // band keys of the batch's DISTINCT values (a value re-appearing
-      // across batches duplicates keys in the store — the value-pair
-      // distinct in [[simhashAppendValuePairs]] absorbs it)
-      val newVKeys = simhashValueKeys(newSigs, bits, bands)
-        .localCheckpoint(eager = false)
-      sigPieces :+= newSigs
-      vkeyPieces :+= newVKeys
-      // touched value-buckets only (quotient guard), hamming filter
-      // before member expansion — the shared append cores q326 and
-      // the streaming maintainer both run
-      val pairs = simhashExpandPairs(
-          simhashAppendValuePairs(newVKeys,
-            vkeyPieces.reduce(_ unionByName _), maxDist, maxBucket),
-          newSigs, sigPieces.reduce(_ unionByName _))
-        .localCheckpoint(eager = false)
-      out = if (out == null) pairs else out.unionByName(pairs)
-    }
-    out
-  }
+      maxBucket: Int = 4096, nBatches: Int = 3): DataFrame =
+    simhashReplay(Tables.documents(spark, dir), bits, bands, maxDist,
+      maxBucket, nBatches, None)
 
   /** [[simhashNearDupIncremental]] plus the DELETE verb — q331: the
     * q327/q328 add/delete/add discipline on the LAST heavy family
@@ -2614,41 +2492,69 @@ object Dedup {
   def simhashNearDupWithDeletes(spark: SparkSession, dir: String,
       bits: Int = 48, bands: Int = 4, maxDist: Int = 3,
       maxBucket: Int = 4096, nBatches: Int = 3,
-      deleteMod: Int = 7, deleteRes: Int = 3): DataFrame = {
-    require(nBatches >= 2, "need at least one add batch after the deletes")
-    val docs = Tables.documents(spark, dir)
+      deleteMod: Int = 7, deleteRes: Int = 3): DataFrame =
+    simhashReplay(Tables.documents(spark, dir), bits, bands, maxDist,
+      maxBucket, nBatches,
+      Some(Replay.Deletes(deleteMod, deleteRes, reAdd = false)))
+
+  /** The simhash family's replay body (q326, q331).
+    *
+    * `maxBucket` caps DISTINCT VALUES per band bucket (not docs — the
+    * quotient already absorbed duplicate volume): per-bucket
+    * value-pair work is n², so 4096 bounds a touched bucket at ~17M
+    * cheap (long, long) comparisons before the hamming filter; the
+    * 12-bit band slices are token-bias-skewed enough that a 5k-doc
+    * corpus already puts 331 distinct values in its hottest bucket.
+    *
+    * VALUE-QUOTIENT (the q325 lesson, which this family needs even
+    * more: a dup-heavy corpus piles one simhash VALUE into a band
+    * bucket — 338 docs in one bucket at sf0.1 already — and the
+    * append path has no star/salt fallback, so doc-level banding
+    * fail-fasts where the one-shot silently degrades). A doc's bands
+    * are fully determined by its sh value, so banding over DISTINCT
+    * values is the SAME pairing relation, quotiented:
+    *   - value pairs (va, vb) sharing a band, hamming ≤ maxDist —
+    *     bucket sizes are distinct-value counts, duplicate volume
+    *     can't blow them up;
+    *   - member expansion (new docs of va × stored docs of vb, plus
+    *     same-value pairs at hamming 0) is OUTPUT-sized — those pairs
+    *     are answer rows, not intermediate state.
+    * Union over batches = the one-shot pair set (each pair emits when
+    * its later member arrives) — q46's oracle gates it. */
+  private def simhashReplay(docs: DataFrame, bits: Int, bands: Int,
+      maxDist: Int, maxBucket: Int, nBatches: Int,
+      deletes: Option[Replay.Deletes]): DataFrame = {
     var sigPieces = Seq.empty[DataFrame]
     var vkeyPieces = Seq.empty[DataFrame]
     var out: DataFrame = null
-    def addBatch(batchDocs: DataFrame): Unit = {
-      val newSigs = simhashRowsPortable(batchDocs, bits)
-        .localCheckpoint(eager = false)
-      val newVKeys = simhashValueKeys(newSigs, bits, bands)
-        .localCheckpoint(eager = false)
-      sigPieces :+= newSigs
-      vkeyPieces :+= newVKeys
-      val pairs = simhashExpandPairs(
-          simhashAppendValuePairs(newVKeys,
-            vkeyPieces.reduce(_ unionByName _), maxDist, maxBucket),
-          newSigs, sigPieces.reduce(_ unionByName _))
-        .localCheckpoint(eager = false)
-      out = if (out == null) pairs else out.unionByName(pairs)
-    }
-    def modBatch(b: Int): DataFrame =
-      docs.filter(pmod(col("doc_id"), lit(nBatches.toLong)) === b)
-    (0 until nBatches - 1).foreach(b => addBatch(modBatch(b)))
-    val removed = docs
-      .filter(pmod(col("doc_id"), lit(deleteMod.toLong)) === deleteRes &&
-        pmod(col("doc_id"), lit(nBatches.toLong)) =!= (nBatches - 1))
-      .select(col("doc_id").as("id"))
-      .localCheckpoint(eager = false)
-    def dropIds(df: DataFrame, idCol: String): DataFrame =
-      df.join(removed.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-    sigPieces = Seq(dropIds(sigPieces.reduce(_ unionByName _), "doc_id")
-      .localCheckpoint(eager = false))
-    out = dropIds(dropIds(out, "doc_a"), "doc_b")
-      .localCheckpoint(eager = false)
-    addBatch(modBatch(nBatches - 1))
+    Replay.run(docs, "doc_id", nBatches, deletes)(
+      add = { batch =>
+        val newSigs = simhashRowsPortable(batch, bits)
+          .localCheckpoint(eager = false)
+        // band keys of the batch's DISTINCT values (a value
+        // re-appearing across batches duplicates keys in the store —
+        // the value-pair distinct in [[simhashAppendValuePairs]]
+        // absorbs it)
+        val newVKeys = simhashValueKeys(newSigs, bits, bands)
+          .localCheckpoint(eager = false)
+        sigPieces :+= newSigs
+        vkeyPieces :+= newVKeys
+        // touched value-buckets only (quotient guard), hamming filter
+        // before member expansion — the append cores the streaming
+        // maintainer runs too
+        val pairs = simhashExpandPairs(
+            simhashAppendValuePairs(newVKeys,
+              vkeyPieces.reduce(_ unionByName _), maxDist, maxBucket),
+            newSigs, sigPieces.reduce(_ unionByName _))
+          .localCheckpoint(eager = false)
+        out = if (out == null) pairs else out.unionByName(pairs)
+      },
+      delete = { removed =>
+        sigPieces = Seq(Replay.drop(sigPieces.reduce(_ unionByName _),
+          removed, "doc_id").localCheckpoint(eager = false))
+        out = Replay.drop(out, removed, "doc_a", "doc_b")
+          .localCheckpoint(eager = false)
+      })
     out
   }
 

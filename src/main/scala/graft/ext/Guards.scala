@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 
 /** Fail-fast guards for the two driver-altitude patterns used across
   * the repo.
@@ -100,6 +101,54 @@ object Guards {
           "computation distributed, pre-prune the vocabulary, or " +
           "raise the cap deliberately.")
     rows
+  }
+
+  /** The fail-fast guard of the append cores
+    * ([[graft.ext.Linkage.erAppendEdges]],
+    * [[graft.ext.Dedup.lshAppendCandidates]],
+    * [[graft.ext.Dedup.simhashAppendValuePairs]]), run as ONE action
+    * that also materializes the result.
+    *
+    * `frame` carries a boolean MARKER column `w`. A core ranks each
+    * touched bucket, truncates it at cap+1 (so even a degenerate
+    * bucket keeps the join bounded), and lets the rank-(cap+1) row
+    * bypass its pair filter as a marker row (`w = true`): that row
+    * exists iff a bucket the batch touches is over the cap. The
+    * witness is data, not a metric: a `Dataset.observe` guard
+    * measured WRONG here (under AQE the CollectMetrics accumulator
+    * lands on a plan copy whose updates are dropped, so max(rank)
+    * read 0 while rows flowed).
+    *
+    * The frame is checkpointed LAZILY and the `limit(1)` probe over
+    * the markers is the materializing action: on a healthy frame no
+    * marker exists, so the take scans every partition, and block
+    * unroll consumes each partition's full iterator, so every
+    * partition lands in the checkpoint as a side effect. A dedicated
+    * checkpoint job would be pure overhead. On a violation, or on
+    * any exception the probe throws, the checkpoint's blocks are
+    * released before the error propagates (a retrying stream would
+    * otherwise keep one pairs-sized block set per attempt); a
+    * violation throws `IllegalArgumentException` with `what`.
+    *
+    * Returns the unmarked rows without `w`, a filter over the
+    * materialized checkpoint: callers need not checkpoint it again. */
+  def witnessed(frame: DataFrame, what: String): DataFrame = {
+    val cp = frame.localCheckpoint(eager = false)
+    try {
+      // collect-ok: bounded by limit(1) — the witness probe, which
+      // also materializes the checkpoint
+      val violated = cp.filter(col("w")).limit(1).collect()
+      require(violated.isEmpty, what)
+    } catch {
+      case e: Throwable =>
+        cp.queryExecution.logical.foreach {
+          case r: org.apache.spark.sql.execution.LogicalRDD =>
+            r.rdd.unpersist(blocking = true)
+          case _ =>
+        }
+        throw e
+    }
+    cp.filter(!col("w")).drop("w")
   }
 
   /** Adaptive single-partition collapse for bounded iterative grids:

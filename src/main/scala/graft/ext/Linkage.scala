@@ -185,15 +185,14 @@ object Linkage {
     * pass, no standing state: rank records within bucket
     * (row_number over the bucket key — one shuffle), TRUNCATE at
     * maxBucket+1 (the pass stays bounded even against a degenerate
-    * everyone-same-name bucket), localCheckpoint, and feed the SAME
-    * checkpointed frame to the candidate join — its window
-    * partitioning IS the join key partitioning, so the join
-    * re-shuffles nothing on the index side. The fail-fast cap reads
-    * the rank-(maxBucket+1) WITNESS rows (at most one per oversized
-    * bucket — near-empty on a healthy corpus) semi-joined against
-    * the batch's keys, so touched-bucket semantics cost a point
-    * probe, not an aggregation, and the throw still precedes any
-    * quadratic join. Rank counts distinct
+    * everyone-same-name bucket), and feed the ranked frame to the
+    * candidate join — its window partitioning IS the join key
+    * partitioning, so the join re-shuffles nothing on the index
+    * side. The rank-(maxBucket+1) rows are the guard's witness
+    * markers ([[Guards.witnessed]]: one action checks the cap and
+    * materializes the edges), so the throw still precedes any
+    * caller and the violating join was bounded by the truncation.
+    * Rank counts distinct
     * records because [[deletionKeys]] emits distinct keys per record
     * (array_distinct — which also makes the distinct-record bound
     * the join fan-out bound, the r14 ADVICE note), and a replayed
@@ -240,27 +239,8 @@ object Linkage {
     val bounded = probed
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= maxBucket + 1)
-    // ONE action per append (r16 opt): the guard WITNESS rides the
-    // candidate join instead of running as its own job. A touched
-    // bucket over the cap kept exactly one rank-(cap+1) row, and that
-    // row joins ≥ 1 new key of its bucket, so letting rank-(cap+1)
-    // rows BYPASS the pair filters and land in the checkpointed
-    // output as marker rows (w = true) makes the guard a near-free
-    // filter probe over already-local checkpointed blocks. The r15
-    // shape paid a separate witness limit(1).collect() per batch that
-    // also forced a persist of the index-sized ranked frame so two
-    // consumers could share it; with ONE consumer the persist (and
-    // its memory pressure — the old accretion-collapse note)
-    // disappears. On a healthy corpus no rank-(cap+1) row exists, so
-    // the checkpointed frame is bit-identical to the old edge set
-    // (plus a constant false column dropped below); on violation the
-    // require throws before any caller sees the edges — and the join
-    // the violating action ran was BOUNDED by the rank truncation,
-    // never quadratic. (A Dataset.observe guard measured WRONG here:
-    // under AQE the inner CollectMetrics accumulator lands on a plan
-    // copy whose updates are dropped — observed max(rn) returned 0
-    // with rows demonstrably flowing — so the witness is data, not a
-    // metric.)
+    // the rank-(cap+1) rows bypass the pair filters as marker rows,
+    // so the guard rides the candidate join ([[Guards.witnessed]])
     val edges = newKeys.select(col("c_nationkey"), col("c_mktsegment"),
         col("k"), col("c_custkey").as("ca"), col("c_name").as("na"))
       .join(bounded.select(col("c_nationkey"), col("c_mktsegment"),
@@ -274,19 +254,10 @@ object Linkage {
         greatest(col("ca"), col("cb")).as("doc_b"),
         (col("rn") === maxBucket + 1).as("w"))
       .distinct()
-      // LAZY: the witness probe below is the materializing action —
-      // RDD block unroll consumes each partition's full iterator, so
-      // the take-probe persists every partition as a side effect and
-      // a dedicated checkpoint job would be pure overhead (r16 opt)
-      .localCheckpoint(eager = false)
-    // collect-ok: bounded by limit(1) — witness probe; doubles as the
-    // checkpoint materialization (scans every partition by design)
-    val violated = edges.filter(col("w")).limit(1).collect()
-    require(violated.isEmpty,
+    Guards.witnessed(edges,
       s"erAppendEdges: a touched deletion-key bucket holds > " +
         s"maxBucket=$maxBucket records — dedup exact names first " +
         "instead of joining the hot bucket")
-    edges.filter(!col("w")).select(col("doc_a"), col("doc_b"))
   }
 
   /** [[entityResolution]] (q184) maintained INCREMENTALLY — q323:
@@ -303,33 +274,8 @@ object Linkage {
     * its own keys + touched buckets. */
   def entityResolutionIncremental(spark: SparkSession, dir: String,
       maxDist: Int = 1, maxBucket: Int = 256,
-      nBatches: Int = 3): DataFrame = {
-    require(maxDist >= 0 && maxDist <= 1,
-      s"deletion-neighborhood candidates are recall-complete only for " +
-        s"maxDist <= 1 (got $maxDist)")
-    val recs = customerRecords(spark, dir)
-    // standing index = union of checkpointed batch pieces (the q324
-    // lesson: re-checkpointing the union costs O(corpus) per batch;
-    // the union plan stays nBatches leaves deep)
-    var keyPieces = Seq.empty[DataFrame]
-    var labels = recs
-      .select(col("c_custkey").as("id"), col("c_custkey").as("label"))
-      .limit(0)
-    for (b <- 0 until nBatches) {
-      val newKeys = deletionKeyTable(
-        recs.filter(pmod(col("c_custkey"), lit(nBatches.toLong)) === b))
-        .localCheckpoint(eager = false)
-      keyPieces :+= newKeys
-      labels = Dedup.ccIncrement(labels,
-          erAppendEdges(newKeys, keyPieces.reduce(_ unionByName _),
-            maxDist, maxBucket))
-        // lazy: materializes inside the next batch's first action
-        // (the quotient grid collect touches every label partition),
-        // saving a dedicated per-batch materialization job (r15 opt)
-        .localCheckpoint(eager = false)
-    }
-    entityOutput(labels.select(col("id"), col("label")))
-  }
+      nBatches: Int = 3): DataFrame =
+    erReplay(spark, dir, maxDist, maxBucket, nBatches, None)
 
   /** The deletion-key index's probe-bucket column: pb over the FULL
     * candidate equi-join key (nation, segment, deletion key) — the
@@ -341,13 +287,9 @@ object Linkage {
 
   /** [[entityResolutionIncremental]] plus the DELETE half of the
     * lifecycle — q327 (r13 verdict item 3: every maintenance path
-    * was append-only; takedowns and expired licenses delete).
-    * Replays adds for the first (nBatches−1) custkey-modulo batches
-    * — identical to q323 except the verified edge sets are RETAINED
-    * (deletion-capable state keeps the standing edge table; the
-    * verify stage materializes it anyway) — then deletes every
-    * already-ingested record with custkey ≡ deleteRes (mod
-    * deleteMod) as a tombstone batch:
+    * was append-only; takedowns and expired licenses delete), on the
+    * [[Replay]] add/delete/add schedule with custkey ≡ deleteRes
+    * (mod deleteMod) tombstoned:
     *
     *   - the standing key index drops the removed records' rows
     *     (anti-join — the tombstone applied to the candidate index,
@@ -357,137 +299,75 @@ object Linkage {
     *     components recomputed over surviving edges; survivors left
     *     partnerless become singletons).
     *
-    * The LAST add batch then arrives AFTER the deletes — candidates
-    * generate against the tombstoned index, and a new record may
-    * re-match a singleton survivor (the resurrection path
-    * ccDecrement keeps singleton rows for). Output drops singleton
-    * components to match the one-shot contract (an unmatched id
-    * never appears in [[entityResolution]]'s output). Hash-gated by
-    * the q184 recursive-CTE oracle over the SHRUNK corpus — one
-    * oracle, the full add/delete/add discipline. */
+    * Output drops singleton components to match the one-shot
+    * contract (an unmatched id never appears in
+    * [[entityResolution]]'s output). Hash-gated by the q184
+    * recursive-CTE oracle over the SHRUNK corpus. */
   def entityResolutionWithDeletes(spark: SparkSession, dir: String,
       maxDist: Int = 1, maxBucket: Int = 256, nBatches: Int = 3,
-      deleteMod: Int = 7, deleteRes: Int = 3): DataFrame = {
-    require(maxDist >= 0 && maxDist <= 1,
-      s"deletion-neighborhood candidates are recall-complete only for " +
-        s"maxDist <= 1 (got $maxDist)")
-    require(nBatches >= 2, "need at least one add batch after the deletes")
-    val recs = customerRecords(spark, dir)
-    var keyPieces = Seq.empty[DataFrame]
-    var edgePieces = Seq.empty[DataFrame]
-    var labels = recs
-      .select(col("c_custkey").as("id"), col("c_custkey").as("label"))
-      .limit(0)
-    def addBatch(recsBatch: DataFrame): Unit = {
-      val newKeys = deletionKeyTable(recsBatch)
-        .localCheckpoint(eager = false)
-      keyPieces :+= newKeys
-      // erAppendEdges already returns a filter over a checkpoint its
-      // witness probe materialized — re-checkpointing it copied every
-      // block again (one wasted job per batch, r15 opt)
-      val edges = erAppendEdges(newKeys, keyPieces.reduce(_ unionByName _),
-          maxDist, maxBucket)
-      edgePieces :+= edges
-      labels = Dedup.ccIncrement(labels, edges)
-        .localCheckpoint(eager = false) // lazy — see the q323 loop note
-    }
-    def modBatch(b: Int): DataFrame =
-      recs.filter(pmod(col("c_custkey"), lit(nBatches.toLong)) === b)
-    (0 until nBatches - 1).foreach(b => addBatch(modBatch(b)))
-    // tombstone batch: already-ingested custkeys ≡ deleteRes (mod
-    // deleteMod) — the final corpus this must equal one-shot ER over
-    // is expressible as a pure predicate, which is what lets the
-    // DuckDB oracle gate the whole discipline
-    val removed = recs
-      .filter(pmod(col("c_custkey"), lit(deleteMod.toLong)) === deleteRes &&
-        pmod(col("c_custkey"), lit(nBatches.toLong)) =!= (nBatches - 1))
-      .select(col("c_custkey").as("id"))
-      .localCheckpoint(eager = false)
-    keyPieces = Seq(keyPieces.reduce(_ unionByName _)
-      .join(removed.select(col("id").as("c_custkey")), Seq("c_custkey"),
-        "left_anti")
-      .localCheckpoint(eager = false))
-    val edgeStore = edgePieces.reduce(_ unionByName _)
-    labels = Dedup.ccDecrement(labels, edgeStore, removed)
-      .localCheckpoint(eager = false)
-    edgePieces = Seq(edgeStore
-      .join(removed.select(col("id").as("doc_a")), Seq("doc_a"), "left_anti")
-      .join(removed.select(col("id").as("doc_b")), Seq("doc_b"), "left_anti")
-      .localCheckpoint(eager = false))
-    addBatch(modBatch(nBatches - 1))
-    entityOutput(labels.select(col("id"), col("label")))
-      .filter(col("n_members") > 1)
-  }
+      deleteMod: Int = 7, deleteRes: Int = 3): DataFrame =
+    erReplay(spark, dir, maxDist, maxBucket, nBatches,
+      Some(Replay.Deletes(deleteMod, deleteRes, reAdd = false)))
 
   /** [[entityResolutionWithDeletes]] plus the RE-ADD verb — q329
-    * (r14 verdict item 2's batch gate): the same add/delete/add
-    * replay, then the DELETED records arrive AGAIN as one final
-    * batch (un-takedowns, re-licensing — the first CDC sequencing
-    * case a production user hits). Because the delete dropped the
-    * removed records' rows from the standing key index and edge
-    * store, the re-add is indistinguishable from a fresh ingest:
-    * its keys append, candidates generate against the live index
-    * (every surviving record plus the re-added batch itself), edges
-    * re-verify, and [[graft.ext.Dedup.ccIncrement]] folds them —
-    * including edges the delete had severed, which re-form because
+    * (r14 verdict item 2's batch gate): after the add/delete/add
+    * replay the DELETED records arrive AGAIN as one final batch
+    * (un-takedowns, re-licensing). The delete dropped their rows
+    * from the standing key index and edge store, so the re-add is a
+    * fresh ingest, and edges the delete had severed re-form because
     * the re-added record probes the index its old partners still
-    * live in. The final corpus is therefore the FULL customer table,
-    * so q184's one-shot recursive-CTE oracle hash-gates the whole
-    * add/delete/re-add discipline on real data — re-added entities
-    * must land in EXACTLY the clusters a never-deleted corpus
-    * produces. (The streaming twin is the versioned-tombstone CDC
-    * path: [[graft.streaming.StreamOps.erMaintainCdcStream]] masks
-    * only index/edge rows with ingest_batch ≤ the id's latest
-    * tombstone batch, so a re-added id's new rows stay live.) */
+    * live in. The final corpus is the FULL customer table, so q184's
+    * one-shot oracle hash-gates the add/delete/re-add discipline:
+    * re-added entities must land in EXACTLY the clusters a
+    * never-deleted corpus produces. (The streaming twin is
+    * [[graft.streaming.StreamOps.erMaintainCdcStream]]'s versioned
+    * tombstone mask.) */
   def entityResolutionWithReAdds(spark: SparkSession, dir: String,
       maxDist: Int = 1, maxBucket: Int = 256, nBatches: Int = 3,
-      deleteMod: Int = 7, deleteRes: Int = 3): DataFrame = {
+      deleteMod: Int = 7, deleteRes: Int = 3): DataFrame =
+    erReplay(spark, dir, maxDist, maxBucket, nBatches,
+      Some(Replay.Deletes(deleteMod, deleteRes, reAdd = true)))
+
+  /** The ER family's replay body (q323, q327, q329). Standing stores
+    * are unions of checkpointed batch pieces (re-checkpointing the
+    * union would cost O(corpus) per batch; the plan stays a few
+    * leaves deep); [[erAppendEdges]] already returns a filter over a
+    * materialized checkpoint, so the edge pieces are kept as they
+    * are. The labels checkpoint is lazy: it materializes inside the
+    * next batch's first action. */
+  private def erReplay(spark: SparkSession, dir: String, maxDist: Int,
+      maxBucket: Int, nBatches: Int,
+      deletes: Option[Replay.Deletes]): DataFrame = {
     require(maxDist >= 0 && maxDist <= 1,
       s"deletion-neighborhood candidates are recall-complete only for " +
         s"maxDist <= 1 (got $maxDist)")
-    require(nBatches >= 2, "need at least one add batch after the deletes")
     val recs = customerRecords(spark, dir)
     var keyPieces = Seq.empty[DataFrame]
     var edgePieces = Seq.empty[DataFrame]
     var labels = recs
       .select(col("c_custkey").as("id"), col("c_custkey").as("label"))
       .limit(0)
-    def addBatch(recsBatch: DataFrame): Unit = {
-      val newKeys = deletionKeyTable(recsBatch)
-        .localCheckpoint(eager = false)
-      keyPieces :+= newKeys
-      // erAppendEdges already returns a filter over a checkpoint its
-      // witness probe materialized — re-checkpointing it copied every
-      // block again (one wasted job per batch, r15 opt)
-      val edges = erAppendEdges(newKeys, keyPieces.reduce(_ unionByName _),
-          maxDist, maxBucket)
-      edgePieces :+= edges
-      labels = Dedup.ccIncrement(labels, edges)
-        .localCheckpoint(eager = false) // lazy — see the q323 loop note
-    }
-    def modBatch(b: Int): DataFrame =
-      recs.filter(pmod(col("c_custkey"), lit(nBatches.toLong)) === b)
-    (0 until nBatches - 1).foreach(b => addBatch(modBatch(b)))
-    val removedRecs = recs
-      .filter(pmod(col("c_custkey"), lit(deleteMod.toLong)) === deleteRes &&
-        pmod(col("c_custkey"), lit(nBatches.toLong)) =!= (nBatches - 1))
-      .localCheckpoint(eager = false)
-    val removed = removedRecs.select(col("c_custkey").as("id"))
-    keyPieces = Seq(keyPieces.reduce(_ unionByName _)
-      .join(removed.select(col("id").as("c_custkey")), Seq("c_custkey"),
-        "left_anti")
-      .localCheckpoint(eager = false))
-    val edgeStore = edgePieces.reduce(_ unionByName _)
-    labels = Dedup.ccDecrement(labels, edgeStore, removed)
-      .localCheckpoint(eager = false)
-    edgePieces = Seq(edgeStore
-      .join(removed.select(col("id").as("doc_a")), Seq("doc_a"), "left_anti")
-      .join(removed.select(col("id").as("doc_b")), Seq("doc_b"), "left_anti")
-      .localCheckpoint(eager = false))
-    addBatch(modBatch(nBatches - 1))
-    // the RE-ADD batch: the deleted records arrive again, after the
-    // post-delete adds — the index and edges treat them as new
-    addBatch(removedRecs)
+    Replay.run(recs, "c_custkey", nBatches, deletes)(
+      add = { batch =>
+        val newKeys = deletionKeyTable(batch).localCheckpoint(eager = false)
+        keyPieces :+= newKeys
+        val edges = erAppendEdges(newKeys,
+          keyPieces.reduce(_ unionByName _), maxDist, maxBucket)
+        edgePieces :+= edges
+        labels = Dedup.ccIncrement(labels, edges)
+          .localCheckpoint(eager = false)
+      },
+      delete = { removed =>
+        keyPieces = Seq(Replay.drop(keyPieces.reduce(_ unionByName _),
+          removed, "c_custkey").localCheckpoint(eager = false))
+        val edgeStore = edgePieces.reduce(_ unionByName _)
+        labels = Dedup.ccDecrement(labels, edgeStore, removed)
+          .localCheckpoint(eager = false)
+        edgePieces = Seq(Replay.drop(edgeStore, removed, "doc_a", "doc_b")
+          .localCheckpoint(eager = false))
+      })
+    // singleton components are delete survivors; an add-only replay
+    // has none
     entityOutput(labels.select(col("id"), col("label")))
       .filter(col("n_members") > 1)
   }

@@ -205,10 +205,9 @@ object StreamOps {
     * ([[graft.ext.Linkage.readDeletionKeyIndexPruned]]) — per-batch
     * I/O tracks the batch, not the standing index's history (the
     * r13 verdict's one `weak`, closed). The maxBucket guard is FUSED
-    * into the candidate pass (rank-truncate-checkpoint — the
-    * [[graft.ext.Linkage.erAppendEdges]] r15 design), so per-batch
-    * work is one pass over the touched index, never a guard
-    * aggregation plus a join. Parity spec: streaming the
+    * into the candidate pass ([[graft.ext.Guards.witnessed]]), so
+    * per-batch work is one pass over the touched index, never a
+    * guard aggregation plus a join. Parity spec: streaming the
     * customer table in micro-batches lands on the identical one-shot
     * q184 output. */
   def erMaintainStream(records: DataFrame, indexPath: String,
@@ -292,8 +291,8 @@ object StreamOps {
     * disables. Rows whose op is neither "add" nor "delete" FAIL the
     * batch (r14 ADVICE — malformed CDC input must not vanish).
     * The maxBucket guard is FUSED into the candidate pass
-    * ([[graft.ext.Linkage.erAppendEdges]] r15: one ranked pass over
-    * the touched index, never a guard aggregation plus a join).
+    * ([[graft.ext.Guards.witnessed]]: one ranked pass over the
+    * touched index, never a guard aggregation plus a join).
     * Parity spec: streaming
     * adds/deletes/re-adds lands on the one-shot q184 output over the
     * final corpus. */
@@ -312,12 +311,6 @@ object StreamOps {
     val seed = storePath.flatMap(readComponentStore(spark, _))
       .getOrElse(Seq.empty[(Long, Long)].toDF("id", "label"))
     val ref = new java.util.concurrent.atomic.AtomicReference[DataFrame](seed)
-    def readIfExists(p: String): Option[DataFrame] = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp))
-        Some(spark.read.parquet(p))
-      else None
-    }
     val writer = foreachBatchWriter(records.toDF()) { (batch, id) =>
       val b = batch.localCheckpoint(eager = true)
       requireKnownOps(b)
@@ -339,9 +332,8 @@ object StreamOps {
           graft.ext.Linkage.readDeletionKeyIndexPruned(spark,
             indexPath, newKeys, numPb),
           tombstoneVersions(spark, tombPath), "c_custkey")
-        // erAppendEdges returns a filter over a checkpoint its witness
-        // probe materialized; checkpointing it again copied every block
-        // in one more job per add batch
+        // a filter over the checkpoint Guards.witnessed materialized:
+        // checkpointing it again would copy every block in one more job
         val edges = graft.ext.Linkage.erAppendEdges(newKeys, live,
           maxDist, maxBucket, pruneTouched = pruneTouched)
         edges.write.mode("overwrite")
@@ -357,10 +349,9 @@ object StreamOps {
         dels.write.mode("overwrite")
           .parquet(s"$tombPath/ingest_batch=$id")
         val tv = tombstoneVersions(spark, tombPath)
-        val edgeStore = readIfExists(edgePath) match {
-          case Some(e) => maskVersionedEdges(e, tv)
-          case None => Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-        }
+        val edgeStore = readStore(spark, edgePath)
+          .map(maskVersionedEdges(_, tv))
+          .getOrElse(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
         labels = graft.ext.Dedup.ccDecrement(labels, edgeStore, dels,
           driverGridMax = driverGridMax)
       }
@@ -405,12 +396,6 @@ object StreamOps {
     val seed = storePath.flatMap(readComponentStore(spark, _))
       .getOrElse(Seq.empty[(Long, Long)].toDF("id", "label"))
     val ref = new java.util.concurrent.atomic.AtomicReference[DataFrame](seed)
-    def readIfExists(p: String): Option[DataFrame] = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp))
-        Some(spark.read.parquet(p))
-      else None
-    }
     val writer = foreachBatchWriter(docs.toDF()) { (batch, id) =>
       val b = batch.localCheckpoint(eager = true)
       requireKnownOps(b)
@@ -434,8 +419,7 @@ object StreamOps {
               bands * rowsPerBand).as("sig")),
           bands, rowsPerBand).localCheckpoint(eager = true)
         val tv = tombstoneVersions(spark, tombPath)
-        // already materialized by lshAppendCandidates' witness probe,
-        // like erAppendEdges' result above
+        // already materialized by Guards.witnessed, like the ER edges
         val cands = graft.ext.Dedup.lshAppendCandidates(newKeys,
           maskVersioned(graft.ext.Dedup.readLshIndexPruned(spark,
             indexPath, newKeys, numPb), tv, "doc_id"),
@@ -457,10 +441,9 @@ object StreamOps {
         dels.write.mode("overwrite")
           .parquet(s"$tombPath/ingest_batch=$id")
         val tv = tombstoneVersions(spark, tombPath)
-        val edgeStore = readIfExists(edgePath) match {
-          case Some(e) => maskVersionedEdges(e, tv)
-          case None => Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-        }
+        val edgeStore = readStore(spark, edgePath)
+          .map(maskVersionedEdges(_, tv))
+          .getOrElse(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
         labels = graft.ext.Dedup.ccDecrement(labels, edgeStore, dels,
           driverGridMax = driverGridMax)
       }
@@ -514,9 +497,8 @@ object StreamOps {
         id, numPb)
       graft.ext.Dedup.appendToSimhashVKeyStoreBatch(newVKeys,
         vkeyStorePath, id, numPb)
-      // simhashAppendValuePairs already returns a materialized
-      // (witness-probed) checkpoint — re-checkpointing it copied every
-      // block again, one wasted job per micro-batch (r16 opt)
+      // already materialized by Guards.witnessed — checkpointing it
+      // again would copy every block in one more job per micro-batch
       val vPairs = graft.ext.Dedup.simhashAppendValuePairs(newVKeys,
         graft.ext.Dedup.readSimhashVKeyStorePruned(spark,
           vkeyStorePath, newVKeys, numPb),
@@ -546,13 +528,15 @@ object StreamOps {
     * tomb_batch, so an id re-added in a LATER batch writes rows that
     * out-version its tombstone and is matchable again. */
   private def tombstoneVersions(spark: SparkSession,
-      tombPath: String): Option[DataFrame] = {
-    val hp = new org.apache.hadoop.fs.Path(tombPath)
-    if (hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp))
-      Some(spark.read.parquet(tombPath)
-        .groupBy(col("id"))
-        .agg(max(col("ingest_batch").cast("long")).as("tomb_batch")))
-    else None
+      tombPath: String): Option[DataFrame] =
+    readStore(spark, tombPath).map(_.groupBy(col("id"))
+      .agg(max(col("ingest_batch").cast("long")).as("tomb_batch")))
+
+  /** The parquet store at `path`, or None before its first write. */
+  private def readStore(spark: SparkSession,
+      path: String): Option[DataFrame] = {
+    val (fs, root) = storeFs(spark, path)
+    if (fs.exists(root)) Some(spark.read.parquet(path)) else None
   }
 
   /** Drop rows whose `ingest_batch` ≤ the id's latest tombstone

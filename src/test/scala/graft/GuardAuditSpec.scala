@@ -44,6 +44,26 @@ class GuardAuditSpec extends AnyFunSuite {
         unclassified.mkString("\n"))
   }
 
+  // the append cores' witness probe: a limit(1) collect over a bare
+  // boolean marker column, on one line or broken across several
+  private val witnessRe =
+    """\.filter\(\s*col\("[^"]+"\)\s*\)\s*\.limit\(\s*1\s*\)\s*\.collect\s*\(""".r
+
+  test("the witness probe appears in src/main only inside Guards.witnessed") {
+    val sites = AuditRules
+      .scalaSources(java.nio.file.Paths.get("src/main/scala"))
+      .flatMap { f =>
+        witnessRe.findAllMatchIn(java.nio.file.Files.readString(f))
+          .map(m => (f, m.matched.replaceAll("\\s+", "")))
+      }
+    val outside = sites.filterNot { case (f, _) => inGuards(f) }
+    assert(outside.isEmpty,
+      "witness probe outside Guards.scala — route the marker frame " +
+        "through Guards.witnessed:\n" + outside.mkString("\n"))
+    // non-vacuous: the one sanctioned probe is still visible
+    assert(sites.size == 1, s"expected Guards.witnessed's probe alone: $sites")
+  }
+
   test("the audit itself still sees the known guarded sites (no silent regex rot)") {
     // if the regex or the tree layout drifts, this spec must not
     // degenerate into vacuously-green: the sanctioned guard site and

@@ -108,6 +108,24 @@ class IncrementalIndexSpec extends AnyFunSuite {
       quiet.unionByName(nk), maxBucket = 4).count() == 0L)
   }
 
+  test("simhashAppendValuePairs fails fast on an oversized touched bucket") {
+    import spark.implicits._
+    // 5 distinct values sharing one (band, bucket): cap 4 must throw
+    val vkeys = (1L to 5L).map(v => (v, 0, "B")).toDF("v", "band", "bucket")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.simhashAppendValuePairs(vkeys, vkeys, maxBucket = 4).collect()
+    }
+    assert(e.getMessage.contains("maxBucket"))
+    // an untouched oversized bucket must NOT trip the guard: the new
+    // value pairs only with itself (same value, hamming 0)
+    val quiet = (1L to 5L).map(v => (v, 1, "OLD")).toDF("v", "band", "bucket")
+    val nv = Seq((9L, 0, "X")).toDF("v", "band", "bucket")
+    assert(Dedup.simhashAppendValuePairs(nv, quiet.unionByName(nv),
+        maxBucket = 4).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq ==
+      Seq((9L, 9L, 0)))
+  }
+
   test("incremental entity resolution equals one-shot q184") {
     val one = Linkage.entityResolution(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
@@ -268,6 +286,48 @@ class IncrementalIndexSpec extends AnyFunSuite {
       .select(col("id"), col("label"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(lifecycle == one && one.nonEmpty)
+  }
+
+  test("entity resolution with re-adds equals one-shot q184 over the full corpus") {
+    val one = Linkage.entityResolution(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val lifecycle = Linkage.entityResolutionWithReAdds(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sorted.toSeq
+    assert(lifecycle == one && one.nonEmpty)
+    // non-vacuous: some re-added record is in a cluster again
+    val reAdded = lifecycle.map(_._1).filter(id => id % 7 == 3 && id % 3 != 2)
+    assert(reAdded.nonEmpty)
+  }
+
+  test("LSH clusters with re-adds equals one-shot q59 over the full corpus") {
+    val one = Dedup.lshDedupClustersPortable(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val lifecycle = Dedup.lshDedupClustersWithReAdds(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(lifecycle == one && one.nonEmpty)
+    val reAdded = lifecycle.map(_._1).filter(id => id % 7 == 3 && id % 3 != 2)
+    assert(reAdded.nonEmpty)
+  }
+
+  test("simhash near-dup with deletes equals one-shot q46 over the shrunk corpus") {
+    val lifecycle = Dedup.simhashNearDupWithDeletes(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    // the per-batch pair sets stay disjoint through the delete
+    assert(lifecycle.length == lifecycle.distinct.length)
+    // one-shot over the shrunk corpus: signatures are row-local, so
+    // q46's banding over the filtered documents IS the shrunk one-shot
+    val shrunk = Tables.documents(spark, sf).filter(
+      !(pmod(col("doc_id"), lit(7L)) === 3L &&
+        pmod(col("doc_id"), lit(3L)) =!= 2L))
+    val one = Dedup.simhashBandPairs(Dedup.simhashRowsPortable(shrunk),
+        bands = 4, maxDist = 3, compressBuckets = false)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      .sorted.toSeq
+    assert(lifecycle.sorted.toSeq == one && one.nonEmpty)
+    // the deletes really removed something (non-vacuous)
+    assert(one != Dedup.simhashNearDupPortable(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq)
   }
 
   // ---------------------------------------------------------------
@@ -466,6 +526,96 @@ class IncrementalIndexSpec extends AnyFunSuite {
       bands = 8, rowsPerBand = 4).localCheckpoint(eager = true)
     intercept[IllegalArgumentException] {
       Dedup.lshAppendCandidates(keys, keys, maxBucket = 1)
+    }
+  }
+
+  // ---------------------------------------------------------------
+  // Guards.witnessed, the one guard core of the three append paths:
+  // its probe materializes the result's checkpoint, and a tripped
+  // guard releases what the probe cached.
+  // ---------------------------------------------------------------
+
+  /** Each append core on a healthy input, and on one whose touched
+    * bucket is over a cap of 1. */
+  private def appendCores: Seq[(String, () => org.apache.spark.sql.DataFrame,
+      () => org.apache.spark.sql.DataFrame)] = {
+    val recKeys = Linkage.deletionKeyTable(Tables.customer(spark, sf)
+      .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
+        col("c_mktsegment"))).localCheckpoint(eager = true)
+    val bandKeys = Dedup.lshBandKeys(
+      Dedup.shingleRowsFor(Tables.documents(spark, sf), 3).select(
+        col("doc_id"), Dedup.minhashFromShingles(col("sh"), 32).as("sig")),
+      bands = 8, rowsPerBand = 4).localCheckpoint(eager = true)
+    val valueKeys = Dedup.simhashValueKeys(
+      Dedup.simhashRowsPortable(Tables.documents(spark, sf)))
+      .localCheckpoint(eager = true)
+    Seq(
+      ("erAppendEdges", () => Linkage.erAppendEdges(recKeys, recKeys),
+        () => Linkage.erAppendEdges(recKeys, recKeys, maxBucket = 1)),
+      ("lshAppendCandidates",
+        () => Dedup.lshAppendCandidates(bandKeys, bandKeys, maxBucket = 256),
+        () => Dedup.lshAppendCandidates(bandKeys, bandKeys, maxBucket = 1)),
+      ("simhashAppendValuePairs",
+        () => Dedup.simhashAppendValuePairs(valueKeys, valueKeys),
+        () => Dedup.simhashAppendValuePairs(valueKeys, valueKeys,
+          maxBucket = 1)))
+  }
+
+  private def checkpointOf(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.getOrElse(fail("no checkpoint under the guarded frame"))
+
+  test("Guards.witnessed: the probe materializes every partition of the result's checkpoint") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    appendCores.foreach { case (name, healthy, _) =>
+      val out = healthy()
+      val rdd = checkpointOf(out)
+      // block updates reach the status store through the listener bus
+      eventually(timeout(30.seconds)) {
+        val info = spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
+        assert(info.exists(_.numCachedPartitions == rdd.getNumPartitions),
+          s"$name: cached ${info.map(_.numCachedPartitions)} of " +
+            s"${rdd.getNumPartitions} partitions")
+      }
+      // the blocks serve the read: a count runs only its own stages
+      // (the partial count's exchange and the final one), exactly as
+      // over an eagerly checkpointed copy — none of the bounded join's
+      val (n, jobs) = TestSpark.countJobs(out.count())
+      val copy = out.localCheckpoint(eager = true)
+      val (_, copyJobs) = TestSpark.countJobs(copy.count())
+      assert(jobs == copyJobs && jobs <= 2,
+        s"$name: count ran $jobs jobs, $copyJobs over a materialized copy")
+      assert(n > 0, s"$name: empty healthy result")
+    }
+  }
+
+  test("Guards.witnessed: tripped guards leave no cached blocks behind") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    def cached() = {
+      val infos = sc.getRDDStorageInfo
+      (infos.length, infos.map(i => i.memSize + i.diskSize).sum)
+    }
+    val cores = appendCores
+    eventually(timeout(30.seconds)) {
+      val before = cached()
+      Thread.sleep(200)
+      assert(cached() == before) // the status store has settled
+    }
+    val (rddsBefore, bytesBefore) = cached()
+    cores.foreach { case (name, _, tripped) =>
+      (1 to 3).foreach { _ =>
+        val e = intercept[IllegalArgumentException](tripped())
+        assert(e.getMessage.contains("maxBucket"), name)
+      }
+    }
+    eventually(timeout(30.seconds)) {
+      val (rdds, bytes) = cached()
+      assert(rdds <= rddsBefore && bytes <= bytesBefore,
+        s"cached RDDs $rddsBefore -> $rdds, bytes $bytesBefore -> $bytes")
     }
   }
 
